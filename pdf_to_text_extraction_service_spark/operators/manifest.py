@@ -11,10 +11,18 @@ Because dedup is keyed on url and a url's every capture hashes to the
 same bucket, per-bucket dedup equals global dedup — so buckets are
 independently processable, committable and retryable.
 
-Buckets are processed in WAVES (one Spark job per wave). Each wave:
+Buckets are processed in WAVES: one output write and one manifest
+append per wave. Each wave:
   filter pages to its buckets → extract_pipeline → write
   output/bucket=K dirs (idempotent overwrite) → append one manifest
-  row per bucket with row/ok counts + failure-code histogram.
+  row per bucket, computed by one query over the committed output.
+
+Manifest columns (MANIFEST_SCHEMA): ``row_count`` and ``ok_count``
+count the bucket's output rows and its ``success`` rows;
+``failure_codes`` counts failed rows by ``format`` (format names, not
+error codes) and is NULL when the bucket has none; ``started_at`` is
+the wave's start and ``finished_at`` the time its output committed.
+
 Resume = left-anti of bucket ids against manifest rows for the same
 source snapshot.
 
@@ -108,67 +116,42 @@ def run_resumable_extract(
             .option("partitionOverwriteMode", "dynamic")
             .parquet(output_path)
         )
-        # Exact per-bucket metrics from the committed output (columnar
-        # read of 3 small columns — no second extraction pass).  An
-        # all-filtered input (e.g. every page gated by --drop-noindex
-        # or --blocklist) writes NO parquet files, which makes the
-        # read-back unable to infer a schema — that is the legitimate
-        # "every bucket empty" case, not an error.
-        from pyspark.errors import AnalysisException
-
-        try:
-            out = spark.read.parquet(output_path)
-        except AnalysisException as exc:
-            # ONLY the empty-directory/no-files case is legitimate
-            # here (schema drift etc. must PROPAGATE — see
-            # completed_buckets); re-raise anything else
-            if "UNABLE_TO_INFER_SCHEMA" not in str(exc) \
-                    and "Path does not exist" not in str(exc):
-                raise
-            out = None
-        if out is not None:
-            out = out.filter(F.col("bucket").isin(wave))
-            stats = out.groupBy("bucket").agg(
-                F.count("*").alias("row_count"),
-                F.count_if(F.col("success")).alias("ok_count"),
-            )
-            failures = (
-                out.filter(~F.col("success"))
-                .groupBy("bucket", "format").count()
-                .groupBy("bucket")
-                .agg(F.map_from_entries(
-                    F.collect_list(F.struct("format", "count"))
-                ).alias("failure_codes"))
-            )
-            seen = {r["bucket"]
-                    for r in stats.select("bucket").collect()}
-        else:
-            stats = failures = None
-            seen = set()
         finished = datetime.datetime.now(datetime.timezone.utc)
-        if stats is not None:
-            manifest_rows = (
-                stats.join(failures, "bucket", "left")
-                .select(
-                    F.lit(source_snapshot).alias("source_snapshot"),
-                    F.col("bucket"),
-                    "row_count", "ok_count", "failure_codes",
-                    F.lit(started).alias("started_at"),
-                    F.lit(finished).alias("finished_at"),
-                )
+        # Exact per-bucket metrics from the committed output (columnar
+        # read of 3 small columns, no second extraction pass).  Reading
+        # with the known schema makes an all-filtered wave, which
+        # commits no parquet files, read as empty instead of raising.
+        counts = (
+            spark.read.schema(extracted.schema).parquet(output_path)
+            .filter(F.col("bucket").isin(wave))
+            .groupBy("bucket", "success", "format").count()
+        )
+        per_bucket = counts.groupBy("bucket").agg(
+            F.sum("count").alias("row_count"),
+            F.sum(F.when(F.col("success"), F.col("count")))
+            .alias("ok_count"),
+            F.collect_list(F.when(~F.col("success"),
+                                  F.struct("format", "count")))
+            .alias("failed"),
+        )
+        # Buckets with zero input rows still get a manifest row.
+        (
+            spark.range(buckets)
+            .select(F.col("id").cast("int").alias("bucket"))
+            .filter(F.col("bucket").isin(wave))
+            .join(per_bucket, "bucket", "left")
+            .select(
+                F.lit(source_snapshot).alias("source_snapshot"),
+                "bucket",
+                F.coalesce("row_count", F.lit(0)).alias("row_count"),
+                F.coalesce("ok_count", F.lit(0)).alias("ok_count"),
+                F.when(F.size("failed") > 0, F.map_from_entries("failed"))
+                .alias("failure_codes"),
+                F.lit(started).alias("started_at"),
+                F.lit(finished).alias("finished_at"),
             )
-        else:
-            manifest_rows = spark.createDataFrame([], MANIFEST_SCHEMA)
-        # Buckets with zero input rows still need a manifest row.
-        empty = [b for b in wave if b not in seen]
-        if empty:
-            empty_df = spark.createDataFrame(
-                [(source_snapshot, b, 0, 0, None, started, finished)
-                 for b in empty],
-                MANIFEST_SCHEMA,
-            )
-            manifest_rows = manifest_rows.unionByName(empty_df)
-        manifest_rows.write.mode("append").parquet(manifest_path)
+            .write.mode("append").parquet(manifest_path)
+        )
 
         if fail_after_waves is not None and wave_idx + 1 >= fail_after_waves:
             raise RuntimeError(

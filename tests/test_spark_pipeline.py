@@ -15,6 +15,7 @@ from pdf_to_text_extraction_service_spark.operators.dedup import (
     prune_duplicate_captures,
 )
 from pdf_to_text_extraction_service_spark.operators.manifest import (
+    MANIFEST_SCHEMA,
     run_resumable_extract,
 )
 from pdf_to_text_extraction_service_spark.operators.salt import (
@@ -222,6 +223,66 @@ def test_resume_skips_done_buckets(spark, corpus_df, tmp_path):
         F.sum("row_count").alias("rows"), F.sum("ok_count").alias("ok")
     ).first()
     assert (agg["rows"], agg["ok"]) == (mf_tot["rows"], mf_tot["ok"])
+
+
+def _assert_manifest_schema(spark, mf):
+    declared = spark.createDataFrame([], MANIFEST_SCHEMA)
+    assert ([(f.name, f.dataType) for f in mf.schema]
+            == [(f.name, f.dataType) for f in declared.schema])
+
+
+def test_manifest_rows_match_output(spark, corpus_df, tmp_path):
+    """Each manifest row carries its bucket's committed output counts:
+    all rows, success rows, and failed rows per format (NULL when the
+    bucket has no failures); the columns are MANIFEST_SCHEMA."""
+    out_dir = str(tmp_path / "out")
+    mf_dir = str(tmp_path / "manifest")
+    run_resumable_extract(spark, corpus_df, out_dir, mf_dir,
+                          buckets=8, wave_count=4)
+    mf = spark.read.parquet(mf_dir)
+    _assert_manifest_schema(spark, mf)
+
+    expect = {b: [0, 0, {}] for b in range(8)}
+    for r in spark.read.parquet(out_dir).select(
+            "bucket", "success", "format").collect():
+        e = expect[r["bucket"]]
+        e[0] += 1
+        if r["success"]:
+            e[1] += 1
+        else:
+            e[2][r["format"]] = e[2].get(r["format"], 0) + 1
+    expect = {b: (n, ok, failed or None)
+              for b, (n, ok, failed) in expect.items()}
+    rows = mf.collect()
+    assert len(rows) == 8
+    got = {r["bucket"]: (r["row_count"], r["ok_count"], r["failure_codes"])
+           for r in rows}
+    assert got == expect
+    # the corpus exercises both a failure map and a NULL one
+    failure_maps = [v[2] for v in got.values()]
+    assert any(m is None for m in failure_maps)
+    assert any(m is not None for m in failure_maps)
+
+
+def test_manifest_all_filtered_input(spark, corpus_df, tmp_path):
+    """An input with no rows commits one zero-count manifest row per
+    bucket, and a rerun adds nothing."""
+    out_dir = str(tmp_path / "out")
+    mf_dir = str(tmp_path / "manifest")
+    empty = corpus_df.filter("false")
+    run_resumable_extract(spark, empty, out_dir, mf_dir,
+                          buckets=8, wave_count=4)
+    mf = spark.read.parquet(mf_dir)
+    _assert_manifest_schema(spark, mf)
+    got = sorted(
+        (r["bucket"], r["row_count"], r["ok_count"], r["failure_codes"])
+        for r in mf.collect()
+    )
+    assert got == [(b, 0, 0, None) for b in range(8)]
+
+    run_resumable_extract(spark, empty, out_dir, mf_dir,
+                          buckets=8, wave_count=4)
+    assert spark.read.parquet(mf_dir).count() == 8
 
 
 def test_page_table_io_parquet_fallback(spark, corpus_df, tmp_path):

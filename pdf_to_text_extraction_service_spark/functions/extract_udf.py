@@ -64,39 +64,30 @@ EXTRACTED_SCHEMA = StructType([
 ])
 
 
-def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+def _envelope_batches(batches: Iterator["pd.DataFrame"], extract_one,
+                      keep_pages: bool) -> Iterator["pd.DataFrame"]:
+    """The batch → envelope loop shared by extract() and preview():
+    ``extract_one(url, payload, coding_error)`` returns the kernel's
+    ``(Result, format)`` for one document, and each batch comes back
+    as the EXTRACTED_SCHEMA columns.  ``keep_pages=False`` writes
+    ``pages = NULL`` (preview emits no per-page rows)."""
     # Imports inside the worker process.
     import pandas as pd
 
-    from pdf_to_text_extraction_service_spark.kernel import router
-
     for batch in batches:
-        urls = batch["url"].tolist()
-        payloads = batch["html"].tolist()
-        ts = batch["warc_ts"].tolist() if "warc_ts" in batch else [None] * len(urls)
-        langs = batch["lang"].tolist() if "lang" in batch else [None] * len(urls)
-        cerrs = batch["coding_error"].tolist() \
-            if "coding_error" in batch else [None] * len(urls)
+        n = len(batch)
 
-        out: dict[str, list] = {k: [] for k in (
-            "url", "warc_ts", "lang", "format", "success", "text",
-            "method", "file_type", "mime_type", "pages", "metadata",
-            "word_count", "char_count", "error",
-        )}
+        def col(name):
+            return batch[name].tolist() if name in batch else [None] * n
+
+        urls, payloads = col("url"), col("html")
+        ts, langs, cerrs = col("warc_ts"), col("lang"), col("coding_error")
+        out: dict[str, list] = {f.name: [] for f in EXTRACTED_SCHEMA}
         for i, url in enumerate(urls):
             payload = payloads[i]
             if payload is not None and not isinstance(payload, bytes):
                 payload = bytes(payload)
-            if cerrs[i]:
-                # undecodable HTTP content coding (WARC reader
-                # boundary, sources/warc.py): a br/zstd/compress
-                # body must not reach extension-first routing as
-                # raw compressed bytes — failure-coded envelope,
-                # mirroring the reference's success=false philosophy
-                res, fmt = router.Result(
-                    success=False, error=str(cerrs[i])), "unknown"
-            else:
-                res, fmt = router.extract_document(url, payload)
+            res, fmt = extract_one(url, payload, cerrs[i])
             out["url"].append(url)
             out["warc_ts"].append(ts[i])
             out["lang"].append(langs[i])
@@ -107,7 +98,7 @@ def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
             out["file_type"].append(res.file_type)
             out["mime_type"].append(res.mime_type)
             out["pages"].append(
-                None if res.pages is None else [
+                None if not keep_pages or res.pages is None else [
                     {"page_number": p.page_number, "text": p.text,
                      "method": p.method, "word_count": p.word_count}
                     for p in res.pages
@@ -120,56 +111,43 @@ def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFram
         yield pd.DataFrame(out)
 
 
+def _extract_one(url, payload, coding_error):
+    from pdf_to_text_extraction_service_spark.kernel import router
+
+    if coding_error:
+        # undecodable HTTP content coding (WARC reader boundary,
+        # sources/warc.py): a br/zstd/compress body must not reach
+        # extension-first routing as raw compressed bytes —
+        # failure-coded envelope, mirroring the reference's
+        # success=false philosophy
+        return router.Result(success=False,
+                             error=str(coding_error)), "unknown"
+    return router.extract_document(url, payload)
+
+
+def _extract_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    return _envelope_batches(batches, _extract_one, keep_pages=True)
+
+
 def preview(pages_df: DataFrame,
             max_chars: int = 20000,
             max_pages: int = 8) -> DataFrame:
     """Preview-mode pipeline: same batching as extract(), but the
     cost-bounded early-exit kernel (kernel/preview.py — reference
     /api/preview semantics: allowlist, PDF text-layer only, byte
-    truncation + '...')."""
+    truncation + '...').  ``coding_error`` is not read."""
 
-    def _preview_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _preview_one(url, payload, _coding_error):
         from pdf_to_text_extraction_service_spark.kernel import (
             preview as kpreview,
         )
 
-        for batch in batches:
-            urls = batch["url"].tolist()
-            payloads = batch["html"].tolist()
-            ts = batch["warc_ts"].tolist() if "warc_ts" in batch \
-                else [None] * len(urls)
-            langs = batch["lang"].tolist() if "lang" in batch \
-                else [None] * len(urls)
-            out: dict[str, list] = {k: [] for k in (
-                "url", "warc_ts", "lang", "format", "success", "text",
-                "method", "file_type", "mime_type", "pages", "metadata",
-                "word_count", "char_count", "error",
-            )}
-            for i, url in enumerate(urls):
-                payload = payloads[i]
-                if payload is not None and not isinstance(payload, bytes):
-                    payload = bytes(payload)
-                res, fmt = kpreview.preview_document(
-                    url, payload, max_chars=max_chars,
-                    max_pages=max_pages,
-                )
-                out["url"].append(url)
-                out["warc_ts"].append(ts[i])
-                out["lang"].append(langs[i])
-                out["format"].append(fmt)
-                out["success"].append(res.success)
-                out["text"].append(res.text)
-                out["method"].append(res.method)
-                out["file_type"].append(res.file_type)
-                out["mime_type"].append(res.mime_type)
-                out["pages"].append(None)
-                out["metadata"].append(res.metadata)
-                out["word_count"].append(res.word_count)
-                out["char_count"].append(res.char_count)
-                out["error"].append(res.error)
-            yield pd.DataFrame(out)
+        return kpreview.preview_document(
+            url, payload, max_chars=max_chars, max_pages=max_pages,
+        )
+
+    def _preview_batches(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+        return _envelope_batches(batches, _preview_one, keep_pages=False)
 
     cols = [c for c in ("url", "warc_ts", "html", "lang")
             if c in pages_df.columns]

@@ -359,10 +359,6 @@ for _u in range(8):
         _DCT_M[_u, _x] = _cu / 2 * np.cos((2 * _x + 1) * _u * np.pi / 16)
 
 
-def _idct2(block: np.ndarray) -> np.ndarray:
-    return _DCT_M.T @ block @ _DCT_M
-
-
 def _fdct2(block: np.ndarray) -> np.ndarray:
     return _DCT_M @ block @ _DCT_M.T
 
@@ -1410,8 +1406,9 @@ _GIF_LZW_CHUNK = 4400
 
 def _gif_lzw_decode(min_code: int, data: bytes, max_pixels: int) -> bytes:
     """Vectorized GIF LZW decode — bit-identical to
-    :func:`_gif_lzw_decode_ref` (the original per-byte loop, kept as
-    the parity/fuzz pin; see tests/test_gif_lzw_opt.py):
+    ``_gif_lzw_decode_ref`` (the original per-byte loop, kept as
+    the parity/fuzz pin in tests/reference/imgcodec.py; see
+    tests/test_gif_lzw_opt.py):
 
     1. code boundaries follow the deterministic width schedule
        (``_gif_lzw_schedule``), so the variable-width codes are
@@ -1644,60 +1641,6 @@ def _gif_lzw_decode(min_code: int, data: bytes, max_pixels: int) -> bytes:
     if not out_chunks:
         return b""
     return np.concatenate(out_chunks).tobytes()
-
-
-def _gif_lzw_decode_ref(min_code: int, data: bytes,
-                        max_pixels: int) -> bytes:
-    """Reference per-byte LZW loop (pre-r8) — parity/fuzz pin for the
-    vectorized decoder above."""
-    if not (2 <= min_code <= 11):
-        raise ValueError("gif: bad LZW minimum code size")
-    clear = 1 << min_code
-    eoi = clear + 1
-    out = bytearray()
-    table: list[bytes] = []
-
-    def reset():
-        nonlocal table, width, next_code
-        table = [bytes((i,)) for i in range(clear)] + [b"", b""]
-        width = min_code + 1
-        next_code = eoi + 1
-
-    width = 0
-    next_code = 0
-    reset()
-    acc = 0
-    nbits = 0
-    prev: bytes | None = None
-    for byte in data:
-        acc |= byte << nbits
-        nbits += 8
-        while nbits >= width:
-            code = acc & ((1 << width) - 1)
-            acc >>= width
-            nbits -= width
-            if code == clear:
-                reset()
-                prev = None
-                continue
-            if code == eoi:
-                return bytes(out)
-            if code < len(table) and (code < clear or table[code]):
-                entry = table[code]
-            elif code == next_code and prev is not None:
-                entry = prev + prev[:1]
-            else:
-                raise ValueError("gif: bad LZW code")
-            out += entry
-            if len(out) > max_pixels:
-                raise ValueError("gif: pixel data exceeds descriptor")
-            if prev is not None and next_code < 4096:
-                table.append(prev + entry[:1])
-                next_code += 1
-                if next_code == (1 << width) and width < 12:
-                    width += 1
-            prev = entry
-    return bytes(out)
 
 
 _GIF_INTERLACE = ((0, 8), (4, 8), (2, 4), (1, 2))

@@ -1,18 +1,16 @@
 """Url-keyed dedup (latest-capture-wins) — SURVEY.md §2.8.
 
 The north_rule's "url-keyed dedup": one extracted row per url, keeping
-the max ``warc_ts``. Two strategies:
+the max ``warc_ts``. ``dedup_latest`` is
+``groupBy(url).agg(max_by(struct, ts))`` — partial (map-side)
+aggregation shrinks the shuffle to one candidate row per url per map
+partition, which a window/row_number plan cannot do (it shuffles every
+duplicate then sorts). At 100 TB with a low dup rate this is the
+cheaper plan; AQE coalesces the post-agg partitions. The row_number()
+formulation survives only as a test reference
+(tests/reference/dedup.py).
 
-- ``dedup_latest`` (default): ``groupBy(url).agg(max_by(struct, ts))``
-  — partial (map-side) aggregation shrinks the shuffle to one
-  candidate row per url per map partition, which a window/row_number
-  plan cannot do (it shuffles every duplicate then sorts). At 100 TB
-  with a low dup rate this is the cheaper plan; AQE coalesces the
-  post-agg partitions.
-- ``dedup_latest_window``: the row_number()==1 formulation, kept for
-  plans that need the full row ordering or tie-break visibility.
-
-Both run AFTER extraction, so only extracted text shuffles — the html
+It runs AFTER extraction, so only extracted text shuffles — the html
 binary column never enters a shuffle (extract() drops it).
 
 Ties on (url, warc_ts): max_by is non-deterministic under real ties;
@@ -21,7 +19,7 @@ callers that need determinism pass a tiebreak column.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
@@ -36,16 +34,6 @@ def dedup_latest(df: DataFrame, key: str = "url",
         F.max_by(F.struct(*[F.col(c) for c in other]), order).alias("_r")
     )
     return agged.select(key, *[F.col(f"_r.{c}").alias(c) for c in other])
-
-
-def dedup_latest_window(df: DataFrame, key: str = "url",
-                        ts: str = "warc_ts") -> DataFrame:
-    w = Window.partitionBy(key).orderBy(F.col(ts).desc())
-    return (
-        df.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .drop("_rn")
-    )
 
 
 def prune_duplicate_captures(pages: DataFrame, key: str = "url",

@@ -3,11 +3,10 @@
 Catalyst balances BYTES at scan time, but one 200 MiB PDF row in a
 partition of 4 KiB HTML rows starves a task (the reference bounds this
 with per-extractor byte caps + page-worker semaphores; in Spark the
-lever is partitioning). ``salt_repartition`` spreads rows uniformly by
-``xxhash64(url)`` salt; ``size_tiered_repartition`` additionally puts
-the oversized tail on a disjoint salt space so a handful of huge
-documents land in (mostly) dedicated partitions instead of straggling
-mixed tasks. One shuffle either way.
+lever is partitioning). ``size_tiered_repartition`` spreads rows by an
+``xxhash64(url)`` salt and puts the oversized tail on a disjoint salt
+space, so a handful of huge documents land in (mostly) dedicated
+partitions instead of straggling mixed tasks. One shuffle.
 """
 
 from __future__ import annotations
@@ -16,25 +15,13 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def salt_repartition(df: DataFrame, num_partitions: int,
-                     key: str = "url") -> DataFrame:
-    """Uniform repartition on a hash salt of the key (decorrelates
-    input file layout from task assignment)."""
-    salted = df.withColumn(
-        "_salt", F.pmod(F.xxhash64(F.col(key)), F.lit(num_partitions))
-    )
-    return salted.repartition(num_partitions, "_salt").drop("_salt")
-
-
 def size_tiered_repartition(df: DataFrame, num_partitions: int,
-                            payload: str = "html",
-                            key: str = "url",
                             big_bytes: int = 1 << 20,
                             big_partitions: int | None = None) -> DataFrame:
     """Repartition with the oversized tail spread one-per-salt.
 
     Small rows salt into [0, num_partitions) (bounded salt domain →
-    bounded partitioning metadata); rows with length(payload) >=
+    bounded partitioning metadata); rows with length(html) >=
     big_bytes take their FULL 64-bit url hash as salt — a unique salt
     per giant, so after the partitioner re-hashes the salt the giants
     place i.i.d.-uniformly across partitions instead of clustering on
@@ -43,11 +30,11 @@ def size_tiered_repartition(df: DataFrame, num_partitions: int,
     """
     if big_partitions is None:
         big_partitions = max(num_partitions // 4, 1)
-    big = F.length(F.col(payload)) >= F.lit(big_bytes)
+    big = F.length(F.col("html")) >= F.lit(big_bytes)
     salted = df.withColumn(
         "_salt",
-        F.when(big, F.xxhash64(F.col(key)))
-        .otherwise(F.pmod(F.xxhash64(F.col(key)), F.lit(num_partitions))),
+        F.when(big, F.xxhash64(F.col("url")))
+        .otherwise(F.pmod(F.xxhash64(F.col("url")), F.lit(num_partitions))),
     )
     return (
         salted.repartition(num_partitions + big_partitions, "_salt")

@@ -20,7 +20,7 @@ from __future__ import annotations
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from .floodcap import cap_flooded_buckets
@@ -144,32 +144,6 @@ def hyperplane_buckets_pd(all_planes: list[list[list[float]]]):
         return pd.Series(out)
 
     return _bkts
-
-
-def cosine_exact_pd(va_col: str, vb_col: str):
-    """Exact pairwise cosine as one vectorized Arrow pass —
-    bit-identical to ``_dot(a, b) / (_norm(a) * _norm(b))`` (same
-    sequential folds, same IEEE division).  Zero-norm pairs yield
-    NaN, which crosses the Arrow boundary as NULL and is dropped by
-    the threshold filter (the interpreted path raised an ANSI
-    DIVIDE_BY_ZERO error on such rows — strictly more tolerant)."""
-    from pyspark.sql.functions import pandas_udf
-
-    @pandas_udf("double")
-    def _cos(va: pd.Series, vb: pd.Series) -> pd.Series:
-        a = np.asarray([np.asarray(v, dtype=np.float64) for v in va],
-                       dtype=np.float64)
-        b = np.asarray([np.asarray(v, dtype=np.float64) for v in vb],
-                       dtype=np.float64)
-        if a.size == 0:
-            return pd.Series(np.empty(0, dtype=np.float64))
-        dots = np.cumsum(a * b, axis=1)[:, -1]
-        na = np.sqrt(np.cumsum(a * a, axis=1)[:, -1])
-        nb = np.sqrt(np.cumsum(b * b, axis=1)[:, -1])
-        with np.errstate(divide="ignore", invalid="ignore"):
-            return pd.Series(dots / (na * nb))
-
-    return _cos(F.col(va_col), F.col(vb_col))
 
 
 def _bucket_pairs_fn(threshold: float):

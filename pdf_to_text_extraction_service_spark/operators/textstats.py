@@ -52,28 +52,16 @@ def token_count(df: DataFrame, text_col: str = "text") -> DataFrame:
     )
 
 
-def lang_scores(text_col: str):
-    """Per-language stopword-hit scores as JVM expressions: the count
-    of tokens present in each language's stopword set."""
-    toks = f"split({text_col}, ' ')"
-    scores = {}
-    for lang, words in STOPWORDS.items():
-        arr = "array(" + ",".join(f"'{w}'" for w in words) + ")"
-        scores[lang] = F.expr(
-            f"size(filter({toks}, t -> array_contains({arr}, t)))"
-        )
-    return scores
-
-
 def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     """Deterministic argmax over stopword scores (ties → lexicographic
     first language), plus 'und' (undetermined) when all scores are 0.
 
     Vectorized (r8): one Arrow pass with a token->languages dict
     instead of 5 interpreted filter/array_contains lambdas per row —
-    bit-identical to :func:`lang_id_jvm` (integer counts, same
-    first-language tie rule, NULL text -> 'und'); parity pinned by
-    tests/test_textstats_opt.py."""
+    bit-identical to the original pure-JVM expression ``lang_id_jvm``
+    (integer counts, same first-language tie rule, NULL text ->
+    'und'), which lives in tests/reference/textstats.py; parity
+    pinned by tests/test_textstats_opt.py."""
     from pyspark.sql.functions import pandas_udf
 
     langs = sorted(STOPWORDS)
@@ -103,29 +91,6 @@ def lang_id(df: DataFrame, text_col: str = "text") -> DataFrame:
     return df.withColumn("lang_guess", _guess(F.col(text_col)))
 
 
-def lang_id_jvm(df: DataFrame, text_col: str = "text") -> DataFrame:
-    """The original pure-JVM expression (interpreted stopword filter
-    per language) — parity reference for :func:`lang_id`."""
-    scores = lang_scores(text_col)
-    langs = sorted(scores)
-    struct = F.greatest(*[
-        F.struct(scores[lg].alias("s"),
-                 F.lit(_NEG_ORD[lg]).alias("o"),
-                 F.lit(lg).alias("lang"))
-        for lg in langs
-    ])
-    return df.withColumn(
-        "lang_guess",
-        F.when(struct["s"] > 0, struct["lang"]).otherwise(F.lit("und")),
-    )
-
-
-# greatest() on structs compares fields in order; to make ties pick the
-# lexicographically FIRST language we give earlier languages a higher
-# second field.
-_NEG_ORD = {lg: 1000 - i for i, lg in enumerate(sorted(STOPWORDS))}
-
-
 # ------------------------------------------------------ fingerprinting
 
 FP_MOD = 1000000007
@@ -144,36 +109,11 @@ def polyhash(expr: str):
     return F.expr(_POLY % expr)
 
 
-def doc_fingerprint_jvm(df: DataFrame, text_col: str = "text",
-                        n: int = 4) -> DataFrame:
-    """Winnowing-style fingerprint: min polynomial hash over word
-    n-grams (a 1-permutation MinHash with a cross-engine hash) — the
-    pure-JVM reference expression (interpreted HOF char fold; kept as
-    the bit-parity cross-check for the vectorized default below).
-
-    Tokens are split ONCE into a materialized column; the per-shingle
-    lambda only slices the array (CollapseProject keeps the split out
-    of the lambda because it is non-cheap and multiply referenced)."""
-    shingles = (
-        f"transform(sequence(0, greatest(size(_fp_t) - {n}, 0)), "
-        f"i -> array_join(slice(_fp_t, i + 1, {n}), ' '))"
-    )
-    return (
-        df.withColumn("_fp_t", F.split(F.col(text_col), " "))
-        .withColumn(
-            "fingerprint",
-            F.array_min(F.expr(
-                f"transform({shingles}, s -> {_POLY % 's'})"
-            )),
-        )
-        .drop("_fp_t")
-    )
-
-
 def fingerprint_udf(n: int = 4):
     """Vectorized fingerprint: one Arrow-batched pandas_udf, numpy
     column-wise prefix-hash fold (same pattern as the MinHash
-    signature UDF). Bit-identical to doc_fingerprint_jvm:
+    signature UDF). Bit-identical to the pure-JVM HOF expression
+    ``doc_fingerprint_jvm`` in tests/reference/textstats.py:
 
     - an n-gram of single-space-joined tokens is EXACTLY a substring
       of the original text (split-on-' ' then join-with-' ' is the
@@ -242,7 +182,8 @@ def fingerprint_udf(n: int = 4):
 def doc_fingerprint(df: DataFrame, text_col: str = "text",
                     n: int = 4) -> DataFrame:
     """Default fingerprint path: vectorized numpy prefix-hash UDF
-    (bit-identical to doc_fingerprint_jvm — cross-checked in
+    (bit-identical to the ``doc_fingerprint_jvm`` reference in
+    tests/reference/textstats.py — cross-checked in
     tests/test_training_ops.py)."""
     return df.withColumn("fingerprint",
                          fingerprint_udf(n)(F.col(text_col)))

@@ -22,24 +22,16 @@ from pyspark.sql import functions as F
 from ..functions.extract_udf import extract
 from ..operators.dedup import dedup_latest
 from ..operators.salt import size_tiered_repartition
-from ..operators.urlnorm import canonical_url
 
 
 def extract_pipeline(pages: DataFrame,
-                     num_partitions: int | None = None,
                      salt: bool = True,
                      dedup: bool = True,
-                     keep_pages_col: bool = True,
-                     canonicalize_urls: bool = False) -> DataFrame:
+                     keep_pages_col: bool = True) -> DataFrame:
     df = pages
-    if canonicalize_urls:
-        # normalize BEFORE salting/dedup so case/port/param variants of
-        # the same page share a url key (operators/urlnorm.py)
-        df = df.withColumn("url", canonical_url("url"))
+    par = df.sparkSession.sparkContext.defaultParallelism
     if salt:
-        if num_partitions is None:
-            num_partitions = df.sparkSession.sparkContext.defaultParallelism
-        df = size_tiered_repartition(df, num_partitions)
+        df = size_tiered_repartition(df, par)
     else:
         # Scale-adaptive parallelism guard (guide §2.5/§6): a compact
         # corpus scans as fewer 128 MB splits than the cluster has
@@ -49,10 +41,8 @@ def extract_pipeline(pages: DataFrame,
         # bottleneck at ~250 us/page).  One payload shuffle buys
         # full-width extraction; at real scale split count >> cores
         # and this is a no-op, preserving the map-only contract.
-        sc = df.sparkSession.sparkContext
-        scan_parts = df.rdd.getNumPartitions()
-        if scan_parts < sc.defaultParallelism:
-            df = df.repartition(sc.defaultParallelism)
+        if df.rdd.getNumPartitions() < par:
+            df = df.repartition(par)
     out = extract(df)
     if not keep_pages_col:
         out = out.drop("pages")

@@ -52,18 +52,17 @@ def build_session(app_name: str = "webextract",
     return builder.getOrCreate()
 
 
-def tune_arrow_batch(spark: SparkSession, pages, target_mb: int = 4,
-                     lo: int = 64, hi: int = 8192,
-                     sample_rows: int = 2000) -> int:
+def tune_arrow_batch(spark: SparkSession, pages,
+                     target_mb: int = 4) -> int:
     """Size Arrow batches by PAYLOAD BYTES, not rows.
 
     The conservative 256-row default protects multi-MiB office/PDF
     payloads from OOM, but starves thin HTML crawl pages (256 rows of
     ~1 KB = 0.25 MB batches → Python-side per-batch overhead dominates;
     measured 26% extraction slowdown vs right-sized batches at sf0.1).
-    Sample the average `html` length from a bounded scan and set
+    Sample the average `html` length over the first 2000 rows and set
     maxRecordsPerBatch to target ~``target_mb`` MB per batch, clamped
-    to [lo, hi]. Returns the chosen row count. Call per input table
+    to [64, 8192] rows. Returns the chosen row count. Call per input table
     before an extraction job (jobs/extract.py does).
 
     The 4 MB default is deliberate: paired scaling runs showed 32 MB
@@ -75,7 +74,7 @@ def tune_arrow_batch(spark: SparkSession, pages, target_mb: int = 4,
 
     row = (
         pages.select(F.length("html").alias("n"))
-        .limit(sample_rows)
+        .limit(2000)
         .agg(F.avg("n").alias("avg"))
         .first()
     )
@@ -83,7 +82,7 @@ def tune_arrow_batch(spark: SparkSession, pages, target_mb: int = 4,
     if not avg or avg <= 0:
         rows = ARROW_MAX_RECORDS_PER_BATCH
     else:
-        rows = int(max(lo, min(hi, (target_mb * 1024 * 1024) / avg)))
+        rows = int(max(64, min(8192, (target_mb * 1024 * 1024) / avg)))
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                    str(rows))
     return rows

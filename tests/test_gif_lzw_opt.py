@@ -11,8 +11,8 @@ import numpy as np
 from pdf_to_text_extraction_service_spark.kernel import imgcodec
 from pdf_to_text_extraction_service_spark.kernel.imgcodec import (
     _gif_lzw_decode,
-    _gif_lzw_decode_ref,
 )
+from tests.reference.imgcodec import _gif_lzw_decode_ref
 
 
 def _both(min_code, data, max_pixels):

@@ -38,11 +38,10 @@ def test_shingle_hash_ids_udf_matches_jvm_chain(spark):
     """The Arrow shingling UDF == the pre-r8 JVM expression chain
     (split -> shingles -> distinct -> xxhash64 & M31 -> distinct)."""
     from pdf_to_text_extraction_service_spark.operators.neardup import (
-        shingle_hash_ids_udf,
-        shingle_hashes,
         shingles_from_tokens,
         tokens_col,
     )
+    from tests.reference.neardup import shingle_hash_ids_udf, shingle_hashes
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id", "text")
@@ -81,6 +80,8 @@ def test_fused_prep_matches_chained_udfs(spark):
 
     from pdf_to_text_extraction_service_spark.operators.neardup import (
         minhash_prep_fn,
+    )
+    from tests.reference.neardup import (
         minhash_signature_udf,
         shingle_hash_ids_udf,
     )

@@ -35,8 +35,8 @@ def test_train_kmeans_fast_equals_reference(spark):
     reference trainer bit-for-bit (same fixed-shape reduction tree)."""
     from pdf_to_text_extraction_service_spark.operators.ivf import (
         train_kmeans,
-        train_kmeans_reference,
     )
+    from tests.reference.ivf import train_kmeans_reference
 
     df = _mutant_union(spark)
     assert train_kmeans(df, k=6, iters=3) == \

@@ -45,8 +45,8 @@ def test_cosine_exact_pd_equals_sql_fold(spark):
     from pdf_to_text_extraction_service_spark.operators.similarity import (
         _dot,
         _norm,
-        cosine_exact_pd,
     )
+    from tests.reference.similarity import cosine_exact_pd
 
     df = _vecs(spark)
     pairs = df.alias("a").join(

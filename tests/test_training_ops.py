@@ -54,14 +54,14 @@ def test_minhash_udf_matches_jvm_signatures(spark):
     """The vectorized numpy signature path must be bit-identical to
     the pure-JVM reference implementation (same coefficients, same
     mod-2^31-1 arithmetic)."""
-    from pdf_to_text_extraction_service_spark.operators.neardup import (
+    from pdf_to_text_extraction_service_spark.sources.corpus import (
+        load_documents,
+    )
+    from tests.reference.neardup import (
         minhash_signature,
         minhash_signature_udf,
         shingle_hashes,
         word_shingles,
-    )
-    from pdf_to_text_extraction_service_spark.sources.corpus import (
-        load_documents,
     )
 
     docs = load_documents(spark, "/root/testdata/sf0.001")
@@ -207,13 +207,13 @@ def test_simhash_udf_matches_jvm_signatures(spark):
     """The vectorized numpy bit-fold must be bit-identical to the
     pure-JVM simhash64 expression (same token hashes, same
     count>=0 rule)."""
-    from pdf_to_text_extraction_service_spark.operators.neardup import (
+    from pdf_to_text_extraction_service_spark.sources.corpus import (
+        load_documents,
+    )
+    from tests.reference.neardup import (
         sim_token_hashes,
         simhash64,
         simhash64_udf,
-    )
-    from pdf_to_text_extraction_service_spark.sources.corpus import (
-        load_documents,
     )
 
     docs = load_documents(spark, "/root/testdata/sf0.001")
@@ -367,8 +367,8 @@ def test_fingerprint_udf_bit_identical_to_jvm(spark):
     split('') is codepoint-aware, as is the UTF-32 numpy path)."""
     from pdf_to_text_extraction_service_spark.operators.textstats import (
         doc_fingerprint,
-        doc_fingerprint_jvm,
     )
+    from tests.reference.textstats import doc_fingerprint_jvm
 
     rows = [(0, ""), (1, "single"), (2, "a  b   c"),
             (3, " lead and trail "), (4, None),

@@ -112,7 +112,6 @@ def main() -> None:
     ap.add_argument("--manifest", required=True)
     ap.add_argument("--buckets", type=int, default=64)
     ap.add_argument("--no-dedup", action="store_true")
-    ap.add_argument("--arrow-target-mb", type=int, default=4)
     ap.add_argument("--input-format", choices=("parquet", "warc"),
                     default="parquet",
                     help="'warc' reads raw (gzipped) WARC segment "
@@ -152,9 +151,8 @@ def main() -> None:
         snapshot += "-noindex"
     if args.blocklist:
         snapshot += f"-bl{os.path.basename(args.blocklist.rstrip('/'))}"
-    rows = tune_arrow_batch(spark, pages, target_mb=args.arrow_target_mb)
-    print(f"[extract] arrow batch tuned to {rows} rows "
-          f"(~{args.arrow_target_mb} MB/batch)")
+    rows = tune_arrow_batch(spark, pages)
+    print(f"[extract] arrow batch tuned to {rows} rows (~4 MB/batch)")
     run_resumable_extract(
         spark, pages,
         output_path=args.output,

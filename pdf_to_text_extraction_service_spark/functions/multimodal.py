@@ -1,15 +1,25 @@
 """Multimodal column plumbing: opaque binary payloads + typed metadata.
 
-Prompt mandate: image/audio/video as ``binary`` columns with typed
-metadata; decode / feature-extract / resize / frame-sample as Pandas
-UDFs over mapInPandas. Image decode is REAL for PNG and baseline JPEG
-via the from-spec pure-numpy codecs in kernel/imgcodec.py (no image
-libraries exist in this container), matching the reference's
-real-image ingestion path (internal/extractors/image/image.go:39-82);
-the deterministic FAKE container (``FAKEIMG``/``FAKEVID``, see
-make_fake_image) remains as the closed-form oracle-able payload kind.
-Unsupported/malformed formats surface as ``error`` rows — never a
-task crash — exactly like the extraction router's failure envelopes.
+Image/audio/video live in ``binary`` columns; every per-media operator
+here (decode, feature-extract, resize, hash, header and tag walks) is
+one ``(media_id, payload)`` row in, one typed row out.  They all run
+through the one Arrow batch loop, functions/rowmap.map_rows, with the
+shared payload guard :func:`_payload_row`: each operator declares its
+output once as a ``StructType`` and writes only a per-payload row
+function returning the fields it fills.  The guard reads a NULL
+payload as ``b""``, stamps ``media_id``, and turns an exception into
+an ``error`` row with every other field NULL, so unsupported or
+malformed formats never crash a task, like the extraction router's
+failure envelopes.  ``sample_frames`` (one payload → many frames)
+keeps its own loop.
+
+Image decode is real for PNG, JPEG, BMP, GIF, TIFF and WebP (lossless,
+and the lossy key-frame subset) via the from-spec pure-numpy codecs in
+kernel/ (the engine depends on no image library), matching the
+reference's real-image ingestion path
+(internal/extractors/image/image.go:39-82); the deterministic FAKE
+container (``FAKEIMG``/``FAKEVID``, see make_fake_image) remains as
+the closed-form oracle-able payload kind.
 """
 
 from __future__ import annotations
@@ -30,6 +40,8 @@ from pyspark.sql.types import (
     StructField,
     StructType,
 )
+
+from .rowmap import map_rows
 
 if TYPE_CHECKING:
     import pandas as pd
@@ -140,6 +152,22 @@ def make_fake_video(frames: int, width: int, height: int,
     return FAKE_VID_MAGIC + struct.pack(">III", frames, width, height) + body
 
 
+def _payload_row(fn):
+    """The payload operators' row convention, around a per-payload
+    ``fn(payload) -> dict``: a NULL payload reads as ``b""``, the row
+    carries ``media_id``, and an uncaught exception becomes an error
+    row (every other field NULL, ``error=str(exc)``)."""
+
+    def row(media_id, payload) -> dict:
+        try:
+            return {"media_id": media_id,
+                    **fn(bytes(payload) if payload is not None else b"")}
+        except Exception as exc:
+            return {"media_id": media_id, "error": str(exc)}
+
+    return row
+
+
 def _hist16(body) -> list[float]:
     """16-bin byte histogram, L1-normalized — the stand-in for a real
     embedding; deterministic, so testable end-to-end."""
@@ -205,34 +233,18 @@ def _decode_image(payload: bytes) -> tuple[int, int, list[float]]:
 
 def image_features(df: DataFrame, id_col: str = "media_id",
                    payload_col: str = "payload") -> DataFrame:
-    """Decode + feature-extract over Arrow batches."""
+    """Decode + feature-extract; error rows keep ``n_bytes``."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(payload: bytes) -> dict:
+        try:
+            w, h, feats = _decode_image(payload)
+        except Exception as exc:
+            return {"n_bytes": len(payload), "error": str(exc)}
+        return {"width": w, "height": h, "n_bytes": len(payload),
+                "features": feats}
 
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "width", "height",
-                                   "n_bytes", "features", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                out["n_bytes"].append(len(payload))
-                try:
-                    w, h, feats = _decode_image(payload)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["features"].append(feats)
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["features"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=IMAGE_FEATURES_SCHEMA
-    )
+    return map_rows(df, [id_col, payload_col], IMAGE_FEATURES_SCHEMA,
+                    _payload_row(_row))
 
 
 RESIZE_SCHEMA = StructType([
@@ -300,67 +312,35 @@ def resize_images(df: DataFrame, out_w: int = 8, out_h: int = 8,
                   payload_col: str = "payload") -> DataFrame:
     """Thumbnail operator: decode → deterministic area-average resize
     (imgcodec.resize_area, integer math) → grayscale pixel array.
-    The mapInPandas shape a real thumbnailing stage would have; errors
+    The row shape a real thumbnailing stage would have; errors
     surface as rows, never task crashes."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import imgcodec
 
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "width", "height",
-                                   "thumb", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    _, _, gray = _decode_gray(payload)
-                    small = imgcodec.resize_area(gray, out_w, out_h)
-                    out["width"].append(out_w)
-                    out["height"].append(out_h)
-                    out["thumb"].append(
-                        [int(v) for v in small.reshape(-1)])
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["thumb"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        _, _, gray = _decode_gray(payload)
+        small = imgcodec.resize_area(gray, out_w, out_h)
+        return {"width": out_w, "height": out_h,
+                "thumb": [int(v) for v in small.reshape(-1)]}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=RESIZE_SCHEMA)
+    return map_rows(df, [id_col, payload_col], RESIZE_SCHEMA,
+                    _payload_row(_row))
 
 
 def image_dhash(df: DataFrame, id_col: str = "media_id",
                 payload_col: str = "payload") -> DataFrame:
     """Per-image 64-bit difference hash (imgcodec.dhash64)."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import imgcodec
 
-        for batch in batches:
-            out = {"media_id": [], "dhash": [], "error": []}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    _, _, gray = _decode_gray(payload)
-                    h = imgcodec.dhash64(gray)
-                    # store as signed 64-bit (Spark LongType)
-                    out["dhash"].append(h - (1 << 64) if h >= 1 << 63
-                                        else h)
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["dhash"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        _, _, gray = _decode_gray(payload)
+        h = imgcodec.dhash64(gray)
+        # store as signed 64-bit (Spark LongType)
+        return {"dhash": h - (1 << 64) if h >= 1 << 63 else h}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=DHASH_SCHEMA)
+    return map_rows(df, [id_col, payload_col], DHASH_SCHEMA,
+                    _payload_row(_row))
 
 
 def dedup_image_dhash(df: DataFrame, max_hamming: int = 3,
@@ -453,55 +433,34 @@ def video_signatures(df: DataFrame, every_n: int = 1,
     only (real containers need codecs this environment lacks); other
     payloads surface as error rows."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
+    def _row(payload: bytes) -> dict:
         import numpy as np
-        import pandas as pd
 
         from ..kernel import imgcodec
 
         M = 1 << 61
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "n_frames", "width",
-                                   "height", "sig", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    if not payload.startswith(FAKE_VID_MAGIC):
-                        raise ValueError("unsupported video container")
-                    frames, w, h = struct.unpack(">III", payload[8:20])
-                    if w * h == 0 or frames == 0:
-                        raise ValueError("video: bad dimensions")
-                    sig = 0
-                    # each FAKEVID frame record = 8-byte WH prefix
-                    # (the fake-image header sans magic) + w*h pixels
-                    rec = 8 + w * h
-                    for fi in range(0, frames, every_n):
-                        off = 20 + fi * rec + 8
-                        body = np.frombuffer(
-                            payload[off:off + w * h], dtype=np.uint8)
-                        if body.size != w * h:
-                            raise ValueError("video: truncated frame")
-                        gray = body.reshape(h, w)
-                        dh = imgcodec.dhash64(gray)
-                        mean = int(body.sum()) // body.size
-                        sig = (sig * 1099511628211 + (dh % M)) % M
-                        sig = (sig * 1099511628211 + mean) % M
-                    out["n_frames"].append(frames)
-                    out["width"].append(w)
-                    out["height"].append(h)
-                    out["sig"].append(sig)
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["n_frames"].append(None)
-                    out["width"].append(None)
-                    out["height"].append(None)
-                    out["sig"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        if not payload.startswith(FAKE_VID_MAGIC):
+            raise ValueError("unsupported video container")
+        frames, w, h = struct.unpack(">III", payload[8:20])
+        if w * h == 0 or frames == 0:
+            raise ValueError("video: bad dimensions")
+        sig = 0
+        # each FAKEVID frame record = 8-byte WH prefix
+        # (the fake-image header sans magic) + w*h pixels
+        rec = 8 + w * h
+        for fi in range(0, frames, every_n):
+            off = 20 + fi * rec + 8
+            body = np.frombuffer(payload[off:off + w * h], dtype=np.uint8)
+            if body.size != w * h:
+                raise ValueError("video: truncated frame")
+            dh = imgcodec.dhash64(body.reshape(h, w))
+            mean = int(body.sum()) // body.size
+            sig = (sig * 1099511628211 + (dh % M)) % M
+            sig = (sig * 1099511628211 + mean) % M
+        return {"n_frames": frames, "width": w, "height": h, "sig": sig}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=VIDEO_SIG_SCHEMA)
+    return map_rows(df, [id_col, payload_col], VIDEO_SIG_SCHEMA,
+                    _payload_row(_row))
 
 
 def dedup_video_signature(df: DataFrame, every_n: int = 1,
@@ -541,36 +500,17 @@ def audio_features(df: DataFrame, id_col: str = "media_id",
     crossings. The audio analog of image_features; unsupported or
     malformed payloads surface as error rows."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import audiocodec
 
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "sample_rate",
-                                   "channels", "duration_ms",
-                                   "mean_abs", "zero_cross", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    rate, ch, samples = audiocodec.decode_wav(payload)
-                    st = audiocodec.audio_stats(samples, rate, ch)
-                    out["sample_rate"].append(rate)
-                    out["channels"].append(ch)
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["mean_abs"].append(st["mean_abs"])
-                    out["zero_cross"].append(st["zero_cross"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in ("sample_rate", "channels", "duration_ms",
-                              "mean_abs", "zero_cross"):
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        rate, ch, samples = audiocodec.decode_wav(payload)
+        st = audiocodec.audio_stats(samples, rate, ch)
+        return {"sample_rate": rate, "channels": ch,
+                "duration_ms": st["duration_ms"],
+                "mean_abs": st["mean_abs"], "zero_cross": st["zero_cross"]}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=AUDIO_FEATURES_SCHEMA)
+    return map_rows(df, [id_col, payload_col], AUDIO_FEATURES_SCHEMA,
+                    _payload_row(_row))
 
 
 FLAC_DECODE_SCHEMA = StructType([
@@ -597,37 +537,19 @@ def flac_decode_features(df: DataFrame, id_col: str = "media_id",
     energy/silence gates for the biggest lossless container.
     Malformed or over-budget payloads surface as error rows."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import audiocodec, flacdec
 
-        cols = ("media_id", "sample_rate", "channels", "bits",
-                "duration_ms", "mean_abs", "zero_cross", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    info, samples = flacdec.decode_flac_full(payload)
-                    rate, ch = info["sample_rate"], info["channels"]
-                    st = audiocodec.audio_stats(samples, rate, ch)
-                    out["sample_rate"].append(rate)
-                    out["channels"].append(ch)
-                    out["bits"].append(info["bits_per_sample"])
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["mean_abs"].append(st["mean_abs"])
-                    out["zero_cross"].append(st["zero_cross"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        info, samples = flacdec.decode_flac_full(payload)
+        rate, ch = info["sample_rate"], info["channels"]
+        st = audiocodec.audio_stats(samples, rate, ch)
+        return {"sample_rate": rate, "channels": ch,
+                "bits": info["bits_per_sample"],
+                "duration_ms": st["duration_ms"],
+                "mean_abs": st["mean_abs"], "zero_cross": st["zero_cross"]}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=FLAC_DECODE_SCHEMA)
+    return map_rows(df, [id_col, payload_col], FLAC_DECODE_SCHEMA,
+                    _payload_row(_row))
 
 
 MP3_FEATURES_SCHEMA = StructType([
@@ -649,39 +571,13 @@ def mp3_features(df: DataFrame, id_col: str = "media_id",
     no audio decode — so the walk is O(frames) byte jumps per payload;
     malformed streams surface as error rows, never exceptions."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import audiocodec
 
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "sample_rate",
-                                   "channels", "n_frames",
-                                   "duration_ms", "mean_bitrate_kbps",
-                                   "vbr", "error")}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    st = audiocodec.parse_mp3(payload)
-                    out["sample_rate"].append(st["sample_rate"])
-                    out["channels"].append(st["channels"])
-                    out["n_frames"].append(st["n_frames"])
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["mean_bitrate_kbps"].append(
-                        st["mean_bitrate_kbps"])
-                    out["vbr"].append(st["vbr"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in ("sample_rate", "channels", "n_frames",
-                              "duration_ms", "mean_bitrate_kbps",
-                              "vbr"):
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        return audiocodec.parse_mp3(payload)
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=MP3_FEATURES_SCHEMA)
+    return map_rows(df, [id_col, payload_col], MP3_FEATURES_SCHEMA,
+                    _payload_row(_row))
 
 
 AUDIO_TAGS_SCHEMA = StructType([
@@ -713,33 +609,14 @@ def audio_tag_metadata(df: DataFrame, id_col: str = "media_id",
     recognized tag structure surface as error rows, never
     exceptions."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import audiotags
 
-        cols = ("media_id", "container", *audiotags.TAG_FIELDS,
-                "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    st = audiotags.parse_tags(payload)
-                    out["container"].append(st["container"])
-                    for f in audiotags.TAG_FIELDS:
-                        out[f].append(st[f])
-                    out["error"].append(None)
-                except Exception as exc:
-                    out["container"].append(None)
-                    for f in audiotags.TAG_FIELDS:
-                        out[f].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        st = audiotags.parse_tags(payload)
+        return {f: st[f] for f in ("container", *audiotags.TAG_FIELDS)}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=AUDIO_TAGS_SCHEMA)
+    return map_rows(df, [id_col, payload_col], AUDIO_TAGS_SCHEMA,
+                    _payload_row(_row))
 
 
 PNG_TEXT_SCHEMA = StructType([
@@ -768,33 +645,15 @@ def png_text_metadata(df: DataFrame, id_col: str = "media_id",
     reads, no pixel decode; non-PNG payloads surface as error rows,
     never exceptions."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import pngmeta
 
-        cols = ("media_id", *pngmeta.PNG_TEXT_FIELDS,
-                "n_text_chunks", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    st = pngmeta.parse_png_text(payload)
-                    for f in pngmeta.PNG_TEXT_FIELDS:
-                        out[f].append(st[f])
-                    out["n_text_chunks"].append(st["n_text_chunks"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for f in pngmeta.PNG_TEXT_FIELDS:
-                        out[f].append(None)
-                    out["n_text_chunks"].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        st = pngmeta.parse_png_text(payload)
+        return {f: st[f] for f in (*pngmeta.PNG_TEXT_FIELDS,
+                                   "n_text_chunks")}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=PNG_TEXT_SCHEMA)
+    return map_rows(df, [id_col, payload_col], PNG_TEXT_SCHEMA,
+                    _payload_row(_row))
 
 
 MP4_FEATURES_SCHEMA = StructType([
@@ -818,38 +677,15 @@ def mp4_features(df: DataFrame, id_col: str = "media_id",
     dimensions, codec fourccs.  Headers only, no codec decode;
     malformed containers surface as error rows, never exceptions."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import mp4box
 
-        cols = ("media_id", "brand", "duration_ms", "n_tracks",
-                "has_video", "has_audio", "width", "height",
-                "codecs", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    st = mp4box.parse_mp4(payload)
-                    out["brand"].append(st["brand"])
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["n_tracks"].append(st["n_tracks"])
-                    out["has_video"].append(int(st["has_video"]))
-                    out["has_audio"].append(int(st["has_audio"]))
-                    out["width"].append(st["width"])
-                    out["height"].append(st["height"])
-                    out["codecs"].append(st["codecs"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        st = mp4box.parse_mp4(payload)
+        return {**st, "has_video": int(st["has_video"]),
+                "has_audio": int(st["has_audio"])}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=MP4_FEATURES_SCHEMA)
+    return map_rows(df, [id_col, payload_col], MP4_FEATURES_SCHEMA,
+                    _payload_row(_row))
 
 
 CONTAINER_AUDIO_SCHEMA = StructType([
@@ -871,44 +707,23 @@ def container_audio_features(df: DataFrame, id_col: str = "media_id",
     audio extension list header-first; malformed payloads surface as
     error rows."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import audiocodec
 
-        cols = ("media_id", "codec", "sample_rate", "channels",
-                "duration_ms", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    fam = sniff_media(payload)
-                    if fam == "flac":
-                        st = audiocodec.parse_flac(payload)
-                        st = {"codec": "flac", **st}
-                    elif fam == "ogg":
-                        st = audiocodec.parse_ogg(payload)
-                    elif fam == "adts":
-                        st = audiocodec.parse_adts(payload)
-                        st = {"codec": "aac", **st}
-                    else:
-                        raise ValueError(
-                            "unsupported audio container")
-                    out["codec"].append(st["codec"])
-                    out["sample_rate"].append(st["sample_rate"])
-                    out["channels"].append(st["channels"])
-                    out["duration_ms"].append(st["duration_ms"])
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        fam = sniff_media(payload)
+        if fam == "flac":
+            st = {"codec": "flac", **audiocodec.parse_flac(payload)}
+        elif fam == "ogg":
+            st = audiocodec.parse_ogg(payload)
+        elif fam == "adts":
+            st = {"codec": "aac", **audiocodec.parse_adts(payload)}
+        else:
+            raise ValueError("unsupported audio container")
+        return {f: st[f] for f in ("codec", "sample_rate", "channels",
+                                   "duration_ms")}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=CONTAINER_AUDIO_SCHEMA)
+    return map_rows(df, [id_col, payload_col], CONTAINER_AUDIO_SCHEMA,
+                    _payload_row(_row))
 
 
 IMAGE_BREADTH_SCHEMA = StructType([
@@ -937,100 +752,75 @@ def image_breadth_features(df: DataFrame, id_col: str = "media_id",
             raise ValueError("webp: bad VP8 chunk")
         return data[20:20 + size]
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import imgcodec, mp4box
 
-        cols = ("media_id", "codec", "width", "height",
-                "mean_sample", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
+        mean = None
+        fam = sniff_media(payload)
+        if fam == "bmp":
+            arr = imgcodec.decode_bmp(payload)
+            codec = "bmp"
+            w, h = arr.shape[1], arr.shape[0]
+            mean = int(arr.astype("int64").sum()) // arr.size
+        elif fam == "gif":
+            arr = imgcodec.decode_gif(payload)
+            codec = "gif"
+            w, h = arr.shape[1], arr.shape[0]
+            mean = int(arr.astype("int64").sum()) // arr.size
+        elif fam == "tiff":
+            arr = imgcodec.decode_tiff(payload)
+            codec = "tiff"
+            w, h = arr.shape[1], arr.shape[0]
+            mean = int(arr.astype("int64").sum()) // arr.size
+        elif fam == "webp":
+            variant, w, h = imgcodec.webp_dims(payload)
+            codec = "webp-" + variant
+            if variant == "vp8l":
+                # r6: real lossless decode (kernel/vp8l)
+                from ..kernel import vp8l as vp8l_codec
+
+                arr = vp8l_codec.decode_webp_lossless(payload)
+                h, w = arr.shape[0], arr.shape[1]
+                mean = int(arr.astype("int64").sum()) // arr.size
+            elif variant == "vp8":
+                # r7: real lossy key-frame decode within kernel/vp8.py's
+                # verified subset; real-world streams outside it
+                # (default coef probs / qi>3 / B_PRED / loop filter)
+                # stay dims-only
+                from ..kernel import vp8 as vp8_codec
+
                 try:
-                    mean = None
-                    fam = sniff_media(payload)
-                    if fam == "bmp":
-                        arr = imgcodec.decode_bmp(payload)
-                        codec = "bmp"
-                        w, h = arr.shape[1], arr.shape[0]
-                        mean = int(arr.astype("int64").sum()) // arr.size
-                    elif fam == "gif":
-                        arr = imgcodec.decode_gif(payload)
-                        codec = "gif"
-                        w, h = arr.shape[1], arr.shape[0]
-                        mean = int(arr.astype("int64").sum()) // arr.size
-                    elif fam == "tiff":
-                        arr = imgcodec.decode_tiff(payload)
-                        codec = "tiff"
-                        w, h = arr.shape[1], arr.shape[0]
-                        mean = int(arr.astype("int64").sum()) // arr.size
-                    elif fam == "webp":
-                        variant, w, h = imgcodec.webp_dims(payload)
-                        codec = "webp-" + variant
-                        if variant == "vp8l":
-                            # r6: real lossless decode (kernel/vp8l)
-                            from ..kernel import vp8l as vp8l_codec
+                    yp, up, vpn = vp8_codec.decode_vp8(_vp8_chunk(payload))
+                    h, w = yp.shape
+                    # luma-only mean: no YUV->RGB rounding ambiguity in
+                    # the oracle
+                    mean = int(yp.astype("int64").sum()) // yp.size
+                except ValueError:
+                    pass    # outside subset: dims-only
+        elif fam == "avif":
+            brand, w, h = mp4box.parse_avif_dims(payload)
+            codec = "avif"
+        elif fam == "jp2":
+            codec, w, h, _nc, _d = mp4box.parse_jp2_dims(payload)
+            try:
+                # r6: real lossless decode (kernel/jp2k)
+                from ..kernel import jp2k as jp2k_codec
 
-                            arr = vp8l_codec.decode_webp_lossless(
-                                payload)
-                            h, w = arr.shape[0], arr.shape[1]
-                            mean = int(arr.astype("int64").sum()) \
-                                // arr.size
-                        elif variant == "vp8":
-                            # r7: real lossy key-frame decode within
-                            # kernel/vp8.py's verified subset; real-
-                            # world streams outside it (default coef
-                            # probs / qi>3 / B_PRED / loop filter)
-                            # stay dims-only
-                            from ..kernel import vp8 as vp8_codec
+                arr = jp2k_codec.decode_jp2k(payload)
+                h, w = arr.shape[0], arr.shape[1]
+                mean = int(arr.astype("int64").sum()) // arr.size
+            except ValueError:
+                pass    # outside subset: dims-only row
+        elif fam == "svg":
+            w, h = imgcodec.svg_dims(payload)
+            codec = "svg"
+        else:
+            raise ValueError("unsupported image container")
+        return {"codec": codec, "width": int(w), "height": int(h),
+                "mean_sample": mean}
 
-                            try:
-                                yp, up, vpn = vp8_codec.decode_vp8(
-                                    _vp8_chunk(payload))
-                                h, w = yp.shape
-                                # luma-only mean: no YUV->RGB
-                                # rounding ambiguity in the oracle
-                                mean = int(yp.astype("int64").sum()
-                                           ) // yp.size
-                            except ValueError:
-                                pass    # outside subset: dims-only
-                    elif fam == "avif":
-                        brand, w, h = mp4box.parse_avif_dims(payload)
-                        codec = "avif"
-                    elif fam == "jp2":
-                        codec, w, h, _nc, _d = \
-                            mp4box.parse_jp2_dims(payload)
-                        try:
-                            # r6: real lossless decode (kernel/jp2k)
-                            from ..kernel import jp2k as jp2k_codec
-
-                            arr = jp2k_codec.decode_jp2k(payload)
-                            h, w = arr.shape[0], arr.shape[1]
-                            mean = int(arr.astype("int64").sum()) \
-                                // arr.size
-                        except ValueError:
-                            pass    # outside subset: dims-only row
-                    elif fam == "svg":
-                        w, h = imgcodec.svg_dims(payload)
-                        codec = "svg"
-                    else:
-                        raise ValueError("unsupported image container")
-                    out["codec"].append(codec)
-                    out["width"].append(int(w))
-                    out["height"].append(int(h))
-                    out["mean_sample"].append(mean)
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=IMAGE_BREADTH_SCHEMA)
+    return map_rows(df, [id_col, payload_col], IMAGE_BREADTH_SCHEMA,
+                    _payload_row(_row))
 
 
 VIDEO_CONTAINER_SCHEMA = StructType([
@@ -1056,72 +846,43 @@ def video_container_features(df: DataFrame, id_col: str = "media_id",
     dispatchers share the one magic table (:func:`sniff_media`) —
     add a format there and every dispatcher sees it."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import mp4box, videobox
 
-        cols = ("media_id", "container", "duration_ms", "n_tracks",
-                "has_video", "width", "height", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    row = dict.fromkeys(cols[1:-1])
-                    fam = sniff_media(payload)
-                    if fam == "matroska":
-                        st = videobox.parse_matroska(payload)
-                        row.update(container=st["doctype"],
-                                   duration_ms=st["duration_ms"],
-                                   n_tracks=st["n_tracks"],
-                                   has_video=int(st["has_video"]),
-                                   width=st["width"],
-                                   height=st["height"])
-                    elif fam == "avi":
-                        st = videobox.parse_avi(payload)
-                        row.update(container="avi",
-                                   duration_ms=st["duration_ms"],
-                                   n_tracks=st["n_streams"],
-                                   width=st["width"],
-                                   height=st["height"])
-                    elif fam == "asf":
-                        st = videobox.parse_asf(payload)
-                        row.update(container="asf",
-                                   duration_ms=st["duration_ms"])
-                    elif fam == "mp4":
-                        # NOTE: an AVIF/AVIS brand sniffs as an IMAGE
-                        # family and errors here (it previously fell
-                        # into parse_mp4 — a misclassification)
-                        st = mp4box.parse_mp4(payload)
-                        row.update(container="mp4",
-                                   duration_ms=st["duration_ms"],
-                                   n_tracks=st["n_tracks"],
-                                   has_video=int(st["has_video"]),
-                                   width=st["width"],
-                                   height=st["height"])
-                    elif fam == "flv":
-                        st = videobox.parse_flv(payload)
-                        row.update(container="flv",
-                                   duration_ms=st["duration_ms"],
-                                   has_video=int(st["has_video"]),
-                                   width=st["width"],
-                                   height=st["height"])
-                    else:
-                        raise ValueError(
-                            "unsupported video container")
-                    for k, v in row.items():
-                        out[k].append(v)
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
+        fam = sniff_media(payload)
+        if fam == "matroska":
+            st = videobox.parse_matroska(payload)
+            return dict(container=st["doctype"],
+                        duration_ms=st["duration_ms"],
+                        n_tracks=st["n_tracks"],
+                        has_video=int(st["has_video"]),
+                        width=st["width"], height=st["height"])
+        if fam == "avi":
+            st = videobox.parse_avi(payload)
+            return dict(container="avi", duration_ms=st["duration_ms"],
+                        n_tracks=st["n_streams"],
+                        width=st["width"], height=st["height"])
+        if fam == "asf":
+            st = videobox.parse_asf(payload)
+            return dict(container="asf", duration_ms=st["duration_ms"])
+        if fam == "mp4":
+            # NOTE: an AVIF/AVIS brand sniffs as an IMAGE family and
+            # errors here (it previously fell into parse_mp4 — a
+            # misclassification)
+            st = mp4box.parse_mp4(payload)
+            return dict(container="mp4", duration_ms=st["duration_ms"],
+                        n_tracks=st["n_tracks"],
+                        has_video=int(st["has_video"]),
+                        width=st["width"], height=st["height"])
+        if fam == "flv":
+            st = videobox.parse_flv(payload)
+            return dict(container="flv", duration_ms=st["duration_ms"],
+                        has_video=int(st["has_video"]),
+                        width=st["width"], height=st["height"])
+        raise ValueError("unsupported video container")
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=VIDEO_CONTAINER_SCHEMA)
+    return map_rows(df, [id_col, payload_col], VIDEO_CONTAINER_SCHEMA,
+                    _payload_row(_row))
 
 
 MEDIA_FEATURES_SCHEMA = StructType([
@@ -1149,126 +910,94 @@ def media_features(df: DataFrame, id_col: str = "media_id",
     entry point a curation pipeline points at a crawl's media column
     before fanning out to the per-format operators."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def classify(p: bytes) -> dict:
         from ..kernel import audiocodec, imgcodec, mp4box, pdfk, videobox
 
-        cols = ("media_id", "kind", "format", "width", "height",
-                "duration_ms", "sample_rate", "channels", "n_pages",
-                "error")
+        fam = sniff_media(p)
+        if fam == "pdf":
+            return dict(kind="document", format="pdf",
+                        n_pages=pdfk.PDFDoc(p).page_count)
+        if fam in ("png", "jpeg", "bmp", "gif", "tiff", "fakeimg"):
+            w, h, _gray = _decode_gray(p)
+            return dict(kind="image",
+                        format="fake" if fam == "fakeimg" else fam,
+                        width=w, height=h)
+        if fam == "webp":
+            variant, w, h = imgcodec.webp_dims(p)
+            return dict(kind="image", format="webp-" + variant,
+                        width=w, height=h)
+        if fam == "wav":
+            rate, ch, samples = audiocodec.decode_wav(p)
+            return dict(kind="audio", format="wav",
+                        sample_rate=rate, channels=ch,
+                        duration_ms=samples.shape[0] * 1000 // rate)
+        if fam == "flac":
+            st = audiocodec.parse_flac(p)
+            return dict(kind="audio", format="flac",
+                        sample_rate=st["sample_rate"],
+                        channels=st["channels"],
+                        duration_ms=st["duration_ms"])
+        if fam == "ogg":
+            st = audiocodec.parse_ogg(p)
+            return dict(kind="audio", format=st["codec"],
+                        sample_rate=st["sample_rate"],
+                        channels=st["channels"],
+                        duration_ms=st["duration_ms"])
+        if fam == "adts":
+            st = audiocodec.parse_adts(p)
+            return dict(kind="audio", format="aac",
+                        sample_rate=st["sample_rate"],
+                        channels=st["channels"],
+                        duration_ms=st["duration_ms"])
+        if fam == "mp3":
+            st = audiocodec.parse_mp3(p)
+            return dict(kind="audio", format="mp3",
+                        sample_rate=st["sample_rate"],
+                        channels=st["channels"],
+                        duration_ms=st["duration_ms"])
+        if fam == "matroska":
+            st = videobox.parse_matroska(p)
+            return dict(kind="video", format=st["doctype"],
+                        width=st["width"] or None,
+                        height=st["height"] or None,
+                        duration_ms=st["duration_ms"])
+        if fam == "avi":
+            st = videobox.parse_avi(p)
+            return dict(kind="video", format="avi",
+                        width=st["width"], height=st["height"],
+                        duration_ms=st["duration_ms"])
+        if fam == "asf":
+            st = videobox.parse_asf(p)
+            return dict(kind="video", format="asf",
+                        duration_ms=st["duration_ms"])
+        if fam == "flv":
+            st = videobox.parse_flv(p)
+            return dict(kind="video", format="flv",
+                        width=st["width"] or None,
+                        height=st["height"] or None,
+                        duration_ms=st["duration_ms"])
+        if fam == "avif":
+            _b, w, h = mp4box.parse_avif_dims(p)
+            return dict(kind="image", format="avif", width=w, height=h)
+        if fam == "jp2":
+            fmt, w, h, _nc, _d = mp4box.parse_jp2_dims(p)
+            return dict(kind="image", format=fmt, width=w, height=h)
+        if fam == "mp4":
+            st = mp4box.parse_mp4(p)
+            return dict(kind="video" if st["has_video"] else "audio",
+                        format="mp4", width=st["width"] or None,
+                        height=st["height"] or None,
+                        duration_ms=st["duration_ms"])
+        if fam == "fakevid":
+            _frames, w, h = struct.unpack(">III", p[8:20])
+            return dict(kind="video", format="fakevid", width=w, height=h)
+        if fam == "svg":
+            w, h = imgcodec.svg_dims(p)
+            return dict(kind="image", format="svg", width=w, height=h)
+        raise ValueError("unsupported media payload")
 
-        def classify(p: bytes) -> dict:
-            row: dict = dict.fromkeys(cols[1:-1])
-            fam = sniff_media(p)
-            if fam == "pdf":
-                doc = pdfk.PDFDoc(p)
-                row.update(kind="document", format="pdf",
-                           n_pages=doc.page_count)
-            elif fam in ("png", "jpeg", "bmp", "gif", "tiff",
-                         "fakeimg"):
-                fmt = "fake" if fam == "fakeimg" else fam
-                w, h, _gray = _decode_gray(p)
-                row.update(kind="image", format=fmt, width=w, height=h)
-            elif fam == "webp":
-                variant, w, h = imgcodec.webp_dims(p)
-                row.update(kind="image", format="webp-" + variant,
-                           width=w, height=h)
-            elif fam == "wav":
-                rate, ch, samples = audiocodec.decode_wav(p)
-                row.update(kind="audio", format="wav",
-                           sample_rate=rate, channels=ch,
-                           duration_ms=samples.shape[0] * 1000 // rate)
-            elif fam == "flac":
-                st = audiocodec.parse_flac(p)
-                row.update(kind="audio", format="flac",
-                           sample_rate=st["sample_rate"],
-                           channels=st["channels"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "ogg":
-                st = audiocodec.parse_ogg(p)
-                row.update(kind="audio", format=st["codec"],
-                           sample_rate=st["sample_rate"],
-                           channels=st["channels"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "adts":
-                st = audiocodec.parse_adts(p)
-                row.update(kind="audio", format="aac",
-                           sample_rate=st["sample_rate"],
-                           channels=st["channels"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "mp3":
-                st = audiocodec.parse_mp3(p)
-                row.update(kind="audio", format="mp3",
-                           sample_rate=st["sample_rate"],
-                           channels=st["channels"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "matroska":
-                st = videobox.parse_matroska(p)
-                row.update(kind="video", format=st["doctype"],
-                           width=st["width"] or None,
-                           height=st["height"] or None,
-                           duration_ms=st["duration_ms"])
-            elif fam == "avi":
-                st = videobox.parse_avi(p)
-                row.update(kind="video", format="avi",
-                           width=st["width"], height=st["height"],
-                           duration_ms=st["duration_ms"])
-            elif fam == "asf":
-                st = videobox.parse_asf(p)
-                row.update(kind="video", format="asf",
-                           duration_ms=st["duration_ms"])
-            elif fam == "flv":
-                st = videobox.parse_flv(p)
-                row.update(kind="video", format="flv",
-                           width=st["width"] or None,
-                           height=st["height"] or None,
-                           duration_ms=st["duration_ms"])
-            elif fam == "avif":
-                _b, w, h = mp4box.parse_avif_dims(p)
-                row.update(kind="image", format="avif",
-                           width=w, height=h)
-            elif fam == "jp2":
-                fmt, w, h, _nc, _d = mp4box.parse_jp2_dims(p)
-                row.update(kind="image", format=fmt,
-                           width=w, height=h)
-            elif fam == "mp4":
-                st = mp4box.parse_mp4(p)
-                row.update(
-                    kind="video" if st["has_video"] else "audio",
-                    format="mp4", width=st["width"] or None,
-                    height=st["height"] or None,
-                    duration_ms=st["duration_ms"])
-            elif fam == "fakevid":
-                frames, w, h = struct.unpack(">III", p[8:20])
-                row.update(kind="video", format="fakevid",
-                           width=w, height=h)
-            elif fam == "svg":
-                w, h = imgcodec.svg_dims(p)
-                row.update(kind="image", format="svg",
-                           width=w, height=h)
-            else:
-                raise ValueError("unsupported media payload")
-            return row
-
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                out["media_id"].append(mid)
-                try:
-                    row = classify(payload)
-                    for k, v in row.items():
-                        out[k].append(v)
-                    out["error"].append(None)
-                except Exception as exc:
-                    for k in cols[1:-1]:
-                        out[k].append(None)
-                    out["error"].append(str(exc))
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=MEDIA_FEATURES_SCHEMA)
+    return map_rows(df, [id_col, payload_col], MEDIA_FEATURES_SCHEMA,
+                    _payload_row(classify))
 
 
 def sample_frames(df: DataFrame, every_n: int = 2,
@@ -1328,37 +1057,19 @@ def exif_features(df: DataFrame, id_col: str = "media_id",
     operator never raises (reference resilience posture,
     cmd/server/main.go:539-549)."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    fields = EXIF_SCHEMA.fieldNames()[1:-1]
 
+    def _row(payload: bytes) -> dict:
         from ..kernel import exif as exif_mod
 
-        cols = ("media_id", "make", "model", "orientation",
-                "datetime_original", "exposure_time", "f_number",
-                "iso", "focal_length", "gps_present", "gps_lat",
-                "gps_lon", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                vals = {f: None for f in exif_mod.EXIF_FIELDS}
-                err = None
-                try:
-                    vals = exif_mod.parse_exif(payload)
-                except Exception as exc:  # malformed: NULL row + error
-                    err = str(exc)[:200] or "exif: parse error"
-                out["media_id"].append(mid)
-                for f in ("make", "model", "orientation",
-                          "datetime_original", "exposure_time",
-                          "f_number", "iso", "focal_length",
-                          "gps_present", "gps_lat", "gps_lon"):
-                    out[f].append(vals.get(f))
-                out["error"].append(err)
-            yield pd.DataFrame(out)
+        try:
+            vals = exif_mod.parse_exif(payload)
+        except Exception as exc:  # malformed: NULL row + error
+            return {"error": str(exc)[:200] or "exif: parse error"}
+        return {f: vals.get(f) for f in fields}
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=EXIF_SCHEMA
-    )
+    return map_rows(df, [id_col, payload_col], EXIF_SCHEMA,
+                    _payload_row(_row))
 
 
 GIF_ANIM_SCHEMA = StructType([
@@ -1384,36 +1095,25 @@ def gif_animation_features(df: DataFrame, id_col: str = "media_id",
     dedup stage key on.  Non-GIF or malformed payloads yield a NULL
     row with the error string; never raises."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(payload: bytes) -> dict:
         from ..kernel import imgcodec
 
-        cols = ("media_id", "n_frames", "duration_cs", "loop_count",
-                "width", "height", "mean_first", "mean_last", "error")
-        for batch in batches:
-            out = {k: [] for k in cols}
-            for mid, payload in zip(batch[id_col], batch[payload_col]):
-                payload = bytes(payload) if payload is not None else b""
-                row = dict.fromkeys(cols)
-                row["media_id"] = mid
-                try:
-                    frames, delays, loop = imgcodec.gif_animation(payload)
-                    row["n_frames"] = len(frames)
-                    row["duration_cs"] = sum(delays)
-                    row["loop_count"] = loop
-                    row["height"] = frames[0].shape[0]
-                    row["width"] = frames[0].shape[1]
-                    row["mean_first"] = int(
-                        frames[0].astype("int64").sum()) // frames[0].size
-                    row["mean_last"] = int(
-                        frames[-1].astype("int64").sum()) // frames[-1].size
-                except Exception as exc:
-                    row["error"] = str(exc)[:200] or "gif: decode error"
-                for k in cols:
-                    out[k].append(row[k])
-            yield pd.DataFrame(out)
+        # fields filled before a failure stay on the error row
+        row: dict = {}
+        try:
+            frames, delays, loop = imgcodec.gif_animation(payload)
+            row["n_frames"] = len(frames)
+            row["duration_cs"] = sum(delays)
+            row["loop_count"] = loop
+            row["height"] = frames[0].shape[0]
+            row["width"] = frames[0].shape[1]
+            row["mean_first"] = int(
+                frames[0].astype("int64").sum()) // frames[0].size
+            row["mean_last"] = int(
+                frames[-1].astype("int64").sum()) // frames[-1].size
+        except Exception as exc:
+            row["error"] = str(exc)[:200] or "gif: decode error"
+        return row
 
-    return df.select(id_col, payload_col).mapInPandas(
-        _run, schema=GIF_ANIM_SCHEMA
-    )
+    return map_rows(df, [id_col, payload_col], GIF_ANIM_SCHEMA,
+                    _payload_row(_row))

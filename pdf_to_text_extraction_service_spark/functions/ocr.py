@@ -15,9 +15,6 @@ that stage over Arrow batches with the byte-parity kernel
 
 from __future__ import annotations
 
-from collections.abc import Iterator
-from typing import TYPE_CHECKING
-
 from pyspark.sql import DataFrame
 from pyspark.sql.types import (
     BooleanType,
@@ -28,8 +25,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-if TYPE_CHECKING:
-    import pandas as pd
+from .rowmap import map_rows
 
 OCR_RESULT_SCHEMA = StructType([
     StructField("media_id", LongType()),
@@ -42,6 +38,16 @@ OCR_RESULT_SCHEMA = StructType([
 ])
 
 
+def _result(mid, text: str, method: str, err: str | None) -> dict:
+    """One OCR_RESULT_SCHEMA row; counts are BuildCounts over ``text``."""
+    from pdf_to_text_extraction_service_spark.kernel import runes
+
+    wc, cc = runes.build_counts(text)
+    return {"media_id": mid, "success": err is None, "text": text,
+            "method": method, "word_count": wc, "char_count": cc,
+            "error": err}
+
+
 def ocr_clean_results(df: DataFrame, id_col: str = "media_id",
                       pages_col: str = "ocr_pages") -> DataFrame:
     """processOCROnly over a sidecar column of OCR page markdown
@@ -49,34 +55,14 @@ def ocr_clean_results(df: DataFrame, id_col: str = "media_id",
     garbage OCR fails explicitly rather than passing through, with
     the reference's exact error strings."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(mid, pages) -> dict:
+        from pdf_to_text_extraction_service_spark.kernel import ocrclean
 
-        from pdf_to_text_extraction_service_spark.kernel import (
-            ocrclean,
-            runes,
-        )
+        text, err = ocrclean.ocr_text_from_pages(
+            list(pages) if pages is not None else [])
+        return _result(mid, text, "ocr", err)
 
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "success", "text",
-                                   "method", "word_count", "char_count",
-                                   "error")}
-            for mid, pages in zip(batch[id_col], batch[pages_col]):
-                pages = list(pages) if pages is not None else []
-                text, err = ocrclean.ocr_text_from_pages(pages)
-                wc, cc = runes.build_counts(text)
-                out["media_id"].append(mid)
-                out["success"].append(err is None)
-                out["text"].append(text)
-                out["method"].append("ocr")
-                out["word_count"].append(wc)
-                out["char_count"].append(cc)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, pages_col).mapInPandas(
-        _run, schema=OCR_RESULT_SCHEMA
-    )
+    return map_rows(df, [id_col, pages_col], OCR_RESULT_SCHEMA, _row)
 
 
 def transcript_results(df: DataFrame, id_col: str = "media_id",
@@ -90,42 +76,21 @@ def transcript_results(df: DataFrame, id_col: str = "media_id",
     ("groq transcription returned empty transcript",
     transcribe.go:84-87); counts are BuildCounts."""
 
-    def _run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        import pandas as pd
+    def _row(mid, segs) -> dict:
+        from pdf_to_text_extraction_service_spark.kernel import ocrclean
 
-        from pdf_to_text_extraction_service_spark.kernel import (
-            ocrclean,
-            runes,
-        )
+        segs = list(segs) if segs is not None else []
+        if timestamps and segs:
+            text = ocrclean.format_timestamped_transcript(
+                [(s["start"], s["text"]) for s in segs]
+            )
+        else:
+            text = ocrclean._trim_space(
+                " ".join(s["text"] for s in segs if s["text"] is not None)
+            )
+        err = None
+        if text == "":
+            err = "groq transcription returned empty transcript"
+        return _result(mid, text, "groq", err)
 
-        for batch in batches:
-            out = {k: [] for k in ("media_id", "success", "text",
-                                   "method", "word_count", "char_count",
-                                   "error")}
-            for mid, segs in zip(batch[id_col], batch[segments_col]):
-                segs = list(segs) if segs is not None else []
-                if timestamps and segs:
-                    text = ocrclean.format_timestamped_transcript(
-                        [(s["start"], s["text"]) for s in segs]
-                    )
-                else:
-                    text = ocrclean._trim_space(
-                        " ".join(s["text"] for s in segs
-                                 if s["text"] is not None)
-                    )
-                err = None
-                if text == "":
-                    err = "groq transcription returned empty transcript"
-                wc, cc = runes.build_counts(text)
-                out["media_id"].append(mid)
-                out["success"].append(err is None)
-                out["text"].append(text)
-                out["method"].append("groq")
-                out["word_count"].append(wc)
-                out["char_count"].append(cc)
-                out["error"].append(err)
-            yield pd.DataFrame(out)
-
-    return df.select(id_col, segments_col).mapInPandas(
-        _run, schema=OCR_RESULT_SCHEMA
-    )
+    return map_rows(df, [id_col, segments_col], OCR_RESULT_SCHEMA, _row)

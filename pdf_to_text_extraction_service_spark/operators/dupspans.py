@@ -176,8 +176,7 @@ def duplicated_span_stats(docs: DataFrame, n: int = 13,
 def remove_duplicated_spans(docs: DataFrame, n: int = 13,
                             min_count: int = 2,
                             id_col: str = "doc_id",
-                            text_col: str = "text",
-                            eager: bool = True) -> DataFrame:
+                            text_col: str = "text") -> DataFrame:
     """The REMOVAL half of ExactSubstr dedup: rewrite each document
     dropping every token covered by a duplicated window occurrence
     that is not the window's corpus-wide FIRST occurrence (canonical
@@ -240,11 +239,9 @@ def remove_duplicated_spans(docs: DataFrame, n: int = 13,
             "_id long, text_out string, n_tokens int, n_removed int")
         .withColumnRenamed("_id", id_col)
     )
-    if eager:
-        # occurrences now has a single consumer (the grouped pass),
-        # so no persist is needed; the checkpoint bounds the result
-        out = out.localCheckpoint(eager=True)
-    return out
+    # occurrences has a single consumer (the grouped pass), so no
+    # persist is needed; the checkpoint bounds the result
+    return out.localCheckpoint(eager=True)
 
 
 def _rewrite_rows_fn(n: int):

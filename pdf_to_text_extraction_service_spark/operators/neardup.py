@@ -259,8 +259,7 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
                       text_col: str = "text", shingle_n: int = 3,
                       num_perm: int = 64, bands: int = 16,
                       threshold: float = 0.8,
-                      max_bucket: int = 64,
-                      eager: bool = True) -> DataFrame:
+                      max_bucket: int = 64) -> DataFrame:
     """Near-duplicate pairs via MinHash banding + exact verification.
 
     Returns (id_a, id_b, jaccard) with id_a < id_b and verified
@@ -276,19 +275,11 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
     the exact-Jaccard verification below means sampling can only
     lose pairs, never fabricate them).
 
-    ``eager`` (default): the scalar pair output is materialized
-    (localCheckpoint) and the signature cache released before
-    returning — without this the persisted shingle signatures pin
-    executor memory for the session lifetime, and a second identical
-    call trips CacheManager's already-cached warning.  Pass
-    ``eager=False`` to keep the lazy composable plan (plan audits,
-    custom caching).
-
-    ``eager=False`` note (same contract as semdedup.semantic_dedup):
-    the persisted ``sh`` (shingle ids + signatures) and ``banded``
-    relations stay cached inside the returned lazy plan — unpersist
-    responsibility transfers to the caller (materialize, then
-    ``spark.catalog.clearCache()`` or re-call with eager=True).
+    The scalar pair output is materialized (localCheckpoint) and the
+    signature caches released before returning — otherwise the
+    persisted shingle signatures pin executor memory for the session
+    lifetime, and a second identical call trips CacheManager's
+    already-cached warning.
     """
     rows_per_band = num_perm // bands
     # Shingle-hash ids AND signatures are computed ONCE into the
@@ -372,10 +363,9 @@ def minhash_lsh_pairs(df: DataFrame, id_col: str = "doc_id",
         jac.filter(F.col("jaccard") >= threshold)
         .select("id_a", "id_b", F.round("jaccard", 6).alias("jaccard"))
     )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        sh.unpersist()
-        banded.unpersist()
+    out = out.localCheckpoint(eager=True)
+    sh.unpersist()
+    banded.unpersist()
     return out
 
 
@@ -575,8 +565,7 @@ def _simhash_bucket_pairs_fn(max_hamming: int):
 def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
                   text_col: str = "text",
                   max_hamming: int = 3,
-                  max_bucket: int = 4096,
-                  eager: bool = True) -> DataFrame:
+                  max_bucket: int = 4096) -> DataFrame:
     """Candidate near-dup pairs with SimHash Hamming distance <=
     max_hamming. Blocking: 4 16-bit bands (any pair within Hamming 3
     of a 64-bit signature shares at least one exact band).
@@ -585,13 +574,9 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     (operators/floodcap.py) — identical-signature floods (boilerplate
     at web scale) otherwise make the bucket pairing quadratic.
     Buckets at or under the cap are exact; flooded buckets keep a
-    deterministic hash-prefix sample.  ``eager`` materializes the
-    scalar pair output and releases the banded-signature cache
-    (minhash_lsh_pairs' contract); ``eager=False`` keeps the lazy
-    plan for audits/composition, and the persisted ``banded``
-    relation then stays cached inside the returned lazy plan —
-    unpersist responsibility transfers to the caller (materialize,
-    then ``spark.catalog.clearCache()`` or re-call with eager=True).
+    deterministic hash-prefix sample.  The scalar pair output is
+    materialized and the banded-signature cache released before
+    returning (minhash_lsh_pairs' contract).
 
     r8 shape: the bucket self-join (66M candidate rows at sf1.0) and
     the cross-band pair dropDuplicates Exchange are replaced by ONE
@@ -639,9 +624,8 @@ def simhash_pairs(df: DataFrame, id_col: str = "doc_id",
     out = buckets.mapInPandas(
         _simhash_bucket_pairs_fn(max_hamming),
         "id_a long, id_b long, hamming int")
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        banded.unpersist()
+    out = out.localCheckpoint(eager=True)
+    banded.unpersist()
     return out
 
 

@@ -8,10 +8,17 @@ array<struct> column — no Python, no explode, no shuffle.
 
 from __future__ import annotations
 
-from typing import Iterator
-
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import (
+    IntegerType,
+    LongType,
+    StringType,
+    StructField,
+    StructType,
+)
+
+from ..functions.rowmap import map_rows
 
 
 def pdf_page_stats(extracted: DataFrame) -> DataFrame:
@@ -42,11 +49,16 @@ def pdf_page_stats(extracted: DataFrame) -> DataFrame:
     )
 
 
-PDF_IMAGE_STATS_SCHEMA = (
-    "url string, total_pages int, needs_ocr_pages int, "
-    "blank_pages int, n_images int, img_pixels bigint, "
-    "ink_samples bigint, sum_luma bigint"
-)
+PDF_IMAGE_STATS_SCHEMA = StructType([
+    StructField("url", StringType()),
+    StructField("total_pages", IntegerType()),
+    StructField("needs_ocr_pages", IntegerType()),
+    StructField("blank_pages", IntegerType()),
+    StructField("n_images", IntegerType()),
+    StructField("img_pixels", LongType()),
+    StructField("ink_samples", LongType()),
+    StructField("sum_luma", LongType()),
+])
 
 
 def pdf_image_ocr_stats(pages_df: DataFrame,
@@ -59,58 +71,36 @@ def pdf_image_ocr_stats(pages_df: DataFrame,
     tally which textless pages escalate to OCR vs prune as blank
     paper.
 
-    Scale shape: one Arrow-batched ``mapInPandas`` hop (the same
-    budget as extract()); only the two input columns reach the
-    Python worker and only eight scalar columns come back —
+    Scale shape: one Arrow-batched per-row hop (functions/rowmap,
+    the same budget as extract()); only the two input columns reach
+    the Python worker and only eight scalar columns come back —
     map-only, no shuffle."""
 
-    def _batches(batches: Iterator["pd.DataFrame"]) \
-            -> Iterator["pd.DataFrame"]:
-        import pandas as pd
-
+    def _row(url, payload) -> dict:
         from pdf_to_text_extraction_service_spark.kernel import pdfk
 
-        for batch in batches:
-            out: dict[str, list] = {k: [] for k in (
-                "url", "total_pages", "needs_ocr_pages",
-                "blank_pages", "n_images", "img_pixels",
-                "ink_samples", "sum_luma")}
-            for url, payload in zip(batch[url_col].tolist(),
-                                    batch[payload_col].tolist()):
-                payload = bytes(payload) if payload is not None else b""
-                total = needs = blank = n_img = 0
-                pixels = ink = luma = 0
-                try:
-                    doc = pdfk.PDFDoc(payload)
-                    res = pdfk.extract_pdf(payload, "application/pdf",
-                                           doc=doc)
-                    for p in (res.pages or []):
-                        total += 1
-                        if p.method == "needs-ocr":
-                            needs += 1
-                        elif p.method == "blank":
-                            blank += 1
-                        st = doc.page_image_stats(p.page_number)
-                        n_img += st["n_images"]
-                        pixels += st["pixels"]
-                        ink += st["ink_samples"]
-                        luma += st["sum_luma"]
-                except Exception:
-                    # error docs report zeros, never raise — reset
-                    # anything accumulated before the failure so a
-                    # doc that dies at page k is not mistaken for a
-                    # genuine (k-1)-page document
-                    total = needs = blank = n_img = 0
-                    pixels = ink = luma = 0
-                out["url"].append(url)
-                out["total_pages"].append(total)
-                out["needs_ocr_pages"].append(needs)
-                out["blank_pages"].append(blank)
-                out["n_images"].append(n_img)
-                out["img_pixels"].append(pixels)
-                out["ink_samples"].append(ink)
-                out["sum_luma"].append(luma)
-            yield pd.DataFrame(out)
+        payload = bytes(payload) if payload is not None else b""
+        row = dict.fromkeys(PDF_IMAGE_STATS_SCHEMA.fieldNames()[1:], 0)
+        try:
+            doc = pdfk.PDFDoc(payload)
+            res = pdfk.extract_pdf(payload, "application/pdf", doc=doc)
+            for p in (res.pages or []):
+                row["total_pages"] += 1
+                if p.method == "needs-ocr":
+                    row["needs_ocr_pages"] += 1
+                elif p.method == "blank":
+                    row["blank_pages"] += 1
+                st = doc.page_image_stats(p.page_number)
+                row["n_images"] += st["n_images"]
+                row["img_pixels"] += st["pixels"]
+                row["ink_samples"] += st["ink_samples"]
+                row["sum_luma"] += st["sum_luma"]
+        except Exception:
+            # error docs report zeros, never raise — drop anything
+            # accumulated before the failure so a doc that dies at
+            # page k is not mistaken for a genuine (k-1)-page document
+            row = dict.fromkeys(row, 0)
+        return {"url": url, **row}
 
-    return pages_df.select(url_col, payload_col).mapInPandas(
-        _batches, PDF_IMAGE_STATS_SCHEMA)
+    return map_rows(pages_df, [url_col, payload_col],
+                    PDF_IMAGE_STATS_SCHEMA, _row)

@@ -38,15 +38,11 @@ bit-identical results, pinned by tests/test_semdedup_opt.py parity):
 Returns the REMOVED rows: (id, kept_id, cosine) where kept_id is
 the lowest-id qualifying cluster-mate (deterministic witness).
 
-``eager=False`` note (ADVICE r7): the internal per-cluster relation
-stays persisted inside the returned lazy plan — unpersist
-responsibility transfers to the caller (materialize, then
-``spark.catalog.clearCache()`` or re-call with eager=True).  Rows
-whose cosine evaluates NaN (zero-norm embeddings) follow Spark/DuckDB
-NaN ordering (NaN >= threshold is TRUE) and are emitted with a NULL
-cosine (NaN crosses the Arrow boundary as pandas NA); the previous
-ANSI-mode SQL division simply errored on such rows, so this is
-strictly more tolerant.
+Rows whose cosine evaluates NaN (zero-norm embeddings) follow
+Spark/DuckDB NaN ordering (NaN >= threshold is TRUE) and are emitted
+with a NULL cosine (NaN crosses the Arrow boundary as pandas NA); the
+previous ANSI-mode SQL division simply errored on such rows, so this
+is strictly more tolerant.
 """
 
 from __future__ import annotations
@@ -170,13 +166,13 @@ def semantic_dedup(df: DataFrame, k: int = 8, iters: int = 3,
                    vec_col: str = "embedding",
                    max_cluster: int = 4096,
                    centroids: list[list[float]] | None = None,
-                   eager: bool = True) -> DataFrame:
+                   ) -> DataFrame:
     """Cluster-then-prune semantic dedup; see module docstring.
 
     ``centroids`` lets callers reuse an already-trained IVF
-    codebook (index build + dedup in one pass over the corpus);
-    ``eager`` materializes the scalar output and releases the
-    internal caches (the LSH pair ops' production contract)."""
+    codebook (index build + dedup in one pass over the corpus).  The
+    scalar output is materialized and the internal cache released
+    before returning (the LSH pair ops' contract)."""
     if centroids is None:
         centroids = train_kmeans(df, k=k, iters=iters,
                                  id_col=id_col, vec_col=vec_col)
@@ -193,7 +189,6 @@ def semantic_dedup(df: DataFrame, k: int = 8, iters: int = 3,
         _cluster_prune_fn(threshold, id_col),
         f"{id_col} long, kept_id long, cosine double",
     )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        assigned.unpersist()
+    out = out.localCheckpoint(eager=True)
+    assigned.unpersist()
     return out

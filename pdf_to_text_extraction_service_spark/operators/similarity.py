@@ -204,8 +204,7 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
                             threshold: float = 0.99,
                             tables: int = 4, bits: int = 8,
                             seed: int = 11,
-                            max_bucket: int = 256,
-                            eager: bool = True) -> DataFrame:
+                            max_bucket: int = 256) -> DataFrame:
     """Embedding-cosine NEAR-DUP pairs (the dedup counterpart of
     lsh_topk's search): multi-table random-hyperplane blocking, then
     exact cosine verification inside buckets only — never all-pairs.
@@ -224,10 +223,8 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
     exact verify means sampling only loses flood-internal pairs,
     never fabricates them.
 
-    ``eager`` (default) materializes the scalar pair output and
-    releases the vector/banded caches before returning
-    (minhash_lsh_pairs' contract); ``eager=False`` keeps the lazy
-    plan for audits/composition.
+    The scalar pair output is materialized and the vector/banded
+    caches released before returning (minhash_lsh_pairs' contract).
     """
     dim_row = df.select(F.size(vec_col).alias("d")).first()
     if dim_row is None:
@@ -266,8 +263,7 @@ def embedding_neardup_pairs(df: DataFrame, id_col: str = "vec_id",
         pairs.dropDuplicates(["id_a", "id_b"])
         .select("id_a", "id_b", F.round("cosine", 6).alias("cosine"))
     )
-    if eager:
-        out = out.localCheckpoint(eager=True)
-        banded.unpersist()
-        base.unpersist()
+    out = out.localCheckpoint(eager=True)
+    banded.unpersist()
+    base.unpersist()
     return out

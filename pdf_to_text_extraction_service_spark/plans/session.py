@@ -22,6 +22,8 @@ import os
 from pyspark.sql import SparkSession
 
 ARROW_MAX_RECORDS_PER_BATCH = 256
+#: payload bytes per Arrow batch that tune_arrow_batch sizes for
+ARROW_BATCH_TARGET_BYTES = 4 * 1024 * 1024
 
 
 def build_session(app_name: str = "webextract",
@@ -52,8 +54,7 @@ def build_session(app_name: str = "webextract",
     return builder.getOrCreate()
 
 
-def tune_arrow_batch(spark: SparkSession, pages,
-                     target_mb: int = 4) -> int:
+def tune_arrow_batch(spark: SparkSession, pages) -> int:
     """Size Arrow batches by PAYLOAD BYTES, not rows.
 
     The conservative 256-row default protects multi-MiB office/PDF
@@ -61,11 +62,12 @@ def tune_arrow_batch(spark: SparkSession, pages,
     ~1 KB = 0.25 MB batches → Python-side per-batch overhead dominates;
     measured 26% extraction slowdown vs right-sized batches at sf0.1).
     Sample the average `html` length over the first 2000 rows and set
-    maxRecordsPerBatch to target ~``target_mb`` MB per batch, clamped
-    to [64, 8192] rows. Returns the chosen row count. Call per input table
-    before an extraction job (jobs/extract.py does).
+    maxRecordsPerBatch to target ``ARROW_BATCH_TARGET_BYTES`` (4 MB) per
+    batch, clamped to [64, 8192] rows. Returns the chosen row count.
+    Call per input table before an extraction job (jobs/extract.py
+    does).
 
-    The 4 MB default is deliberate: paired scaling runs showed 32 MB
+    The 4 MB target is deliberate: paired scaling runs showed 32 MB
     batches cost ~8% scaling efficiency at 4x parallelism (8 workers
     x large concurrent Arrow/pandas footprints contend on memory
     bandwidth that 2 workers do not), while 4 MB keeps the per-batch
@@ -82,7 +84,7 @@ def tune_arrow_batch(spark: SparkSession, pages,
     if not avg or avg <= 0:
         rows = ARROW_MAX_RECORDS_PER_BATCH
     else:
-        rows = int(max(64, min(8192, (target_mb * 1024 * 1024) / avg)))
+        rows = int(max(64, min(8192, ARROW_BATCH_TARGET_BYTES / avg)))
     spark.conf.set("spark.sql.execution.arrow.maxRecordsPerBatch",
                    str(rows))
     return rows

@@ -145,7 +145,7 @@ def _amend_updates(
 
 
 def latest_capture_amendments(pages_stream: DataFrame) -> DataFrame:
-    """Bi-temporal dedup as an AMENDMENT stream (docs/NEXT.md #9):
+    """Bi-temporal dedup as an AMENDMENT stream:
     per url, GroupState tracks the best capture timestamp ever seen;
     a micro-batch emits an amendment row only when it carries a
     STRICTLY newer capture (late-but-newer data amends, late-but-older

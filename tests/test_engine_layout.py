@@ -24,6 +24,21 @@ MOVED = {
 #: deleted: no caller anywhere
 DELETED = ("scrub_pii_sql", "_count_garbage", "is_space", "_idct2",
            "salt_repartition")
+#: one-row-in, one-row-out Python hops that run through the one
+#: batch loop, functions/rowmap.map_rows
+ROW_MAPPED = {
+    "pdf_to_text_extraction_service_spark/functions/multimodal.py": (
+        "image_features", "resize_images", "image_dhash",
+        "video_signatures", "audio_features", "flac_decode_features",
+        "mp3_features", "audio_tag_metadata", "png_text_metadata",
+        "mp4_features", "container_audio_features",
+        "image_breadth_features", "video_container_features",
+        "media_features", "exif_features", "gif_animation_features"),
+    "pdf_to_text_extraction_service_spark/functions/ocr.py": (
+        "ocr_clean_results", "transcript_results"),
+    "pdf_to_text_extraction_service_spark/operators/pagestats.py": (
+        "pdf_image_ocr_stats",),
+}
 
 
 def _engine_files():
@@ -83,3 +98,25 @@ def test_parity_references_live_in_tests_reference():
         path = ROOT / "tests" / "reference" / f"{module}.py"
         tree = ast.parse(path.read_text(encoding="utf-8"), str(path))
         assert set(names) <= _defined_names(tree), module
+
+
+def _called_names(tree: ast.AST) -> set[str]:
+    names = set()
+    for node in ast.walk(tree):
+        if isinstance(node, ast.Call):
+            func = node.func
+            names.add(func.attr if isinstance(func, ast.Attribute)
+                      else getattr(func, "id", None))
+    return names
+
+
+def test_row_mapped_operators_share_one_batch_loop():
+    assert sum(len(names) for names in ROW_MAPPED.values()) == 19
+    for rel, names in ROW_MAPPED.items():
+        tree = ast.parse((ROOT / rel).read_text(encoding="utf-8"), rel)
+        defs = {node.name: node for node in tree.body
+                if isinstance(node, ast.FunctionDef)}
+        for name in names:
+            calls = _called_names(defs[name])
+            assert "mapInPandas" not in calls, name
+            assert "map_rows" in calls, name

@@ -59,12 +59,27 @@ def test_floodcap_rejects_bad_cap(spark):
         cap_flooded_buckets(df, ["b"], "id", 0)
 
 
+def _executed_plans(spark, action) -> list[str]:
+    """Physical plan descriptions of every SQL execution ``action``
+    runs, read back from the SQL status store (kept with the UI off)."""
+    store = spark._jsparkSession.sharedState().statusStore()
+
+    def executions():
+        execs = store.executionsList()
+        return [execs.apply(i) for i in range(execs.size())]
+
+    last = max((e.executionId() for e in executions()), default=-1)
+    action()
+    return [e.physicalPlanDescription() for e in executions()
+            if e.executionId() > last]
+
+
 @pytest.mark.parametrize("op", ["minhash", "simhash", "embedding"])
 def test_neardup_plans_have_no_bucket_window(spark, op):
-    """Each LSH blocker's executed plan must show the partial-agg
-    flood count and no Window (the r5 skew-funnel fix).  eager=False
-    keeps the lazy plan inspectable (the default eagerly checkpoints
-    the pair output and releases the signature caches)."""
+    """Each LSH blocker's executed plans must show the partial-agg
+    flood count and no Window (the r5 skew-funnel fix).  The blockers
+    checkpoint their pair output before returning, so the plans are
+    the ones the call itself ran."""
     if op == "minhash":
         from pdf_to_text_extraction_service_spark.operators.neardup import (
             minhash_lsh_pairs,
@@ -74,7 +89,8 @@ def test_neardup_plans_have_no_bucket_window(spark, op):
              for i in range(40)],
             "doc_id long, text string",
         )
-        out = minhash_lsh_pairs(docs, max_bucket=8, eager=False)
+        plans = _executed_plans(
+            spark, lambda: minhash_lsh_pairs(docs, max_bucket=8))
     elif op == "simhash":
         from pdf_to_text_extraction_service_spark.operators.neardup import (
             simhash_pairs,
@@ -84,7 +100,8 @@ def test_neardup_plans_have_no_bucket_window(spark, op):
              for i in range(40)],
             "doc_id long, text string",
         )
-        out = simhash_pairs(docs, max_bucket=8, eager=False)
+        plans = _executed_plans(
+            spark, lambda: simhash_pairs(docs, max_bucket=8))
     else:
         from pdf_to_text_extraction_service_spark.operators.similarity import (
             embedding_neardup_pairs,
@@ -93,10 +110,12 @@ def test_neardup_plans_have_no_bucket_window(spark, op):
             [(i, [float(i % 5), 1.0, 2.0]) for i in range(40)],
             "vec_id long, embedding array<float>",
         )
-        out = embedding_neardup_pairs(vecs, max_bucket=8, eager=False)
-    plan = out._jdf.queryExecution().executedPlan().toString()
-    assert "partial_count" in plan
-    assert "Window" not in plan and "row_number" not in plan
+        plans = _executed_plans(
+            spark, lambda: embedding_neardup_pairs(vecs, max_bucket=8))
+    assert plans
+    assert any("partial_count" in plan for plan in plans)
+    for plan in plans:
+        assert "Window" not in plan and "row_number" not in plan
 
 
 def test_minhash_flood_bounded_and_exact_below_cap(spark):

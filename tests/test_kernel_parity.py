@@ -552,7 +552,7 @@ class TestGoJSONFloats:
     """encoding/json float formatting parity (encode.go appendFloat):
     'f' for 1e-6 <= |x| < 1e21 and zero, 'e' otherwise with the
     two-digit-negative-exponent zero stripped — hand-traced Go
-    outputs (docs/NEXT.md #5)."""
+    outputs."""
 
     def test_float_formats(self):
         from pdf_to_text_extraction_service_spark.kernel.gojson import (

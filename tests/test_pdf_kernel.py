@@ -115,7 +115,7 @@ class TestModernLayouts:
     """PDF 1.5 layouts: xref stream + object streams (pdfk._read_xref
     / _expand_objstm), PNG Up-predictor, indirect /Length — the
     default output of modern writers (poppler.go handles these
-    natively; docs/NEXT.md #3)."""
+    natively)."""
 
     def _classic_and_modern(self, **kw):
         pages = [GOOD_LINES, GOOD_LINES + ["extra line two three"]]
@@ -204,8 +204,8 @@ class TestModernLayouts:
 
 class TestCMapFonts:
     """Font-encoded text via /ToUnicode CMaps (pdfk._parse_tounicode,
-    hex-string tokenization, Tf font tracking) — the last PDF parity
-    gap from docs/NEXT.md #3: subsetted real-world fonts show glyph
+    hex-string tokenization, Tf font tracking) — a former PDF parity
+    gap: subsetted real-world fonts show glyph
     CODES, not characters."""
 
     def test_cmap_text_identical_to_literal(self):

@@ -319,7 +319,7 @@ def test_idempotent_rerun_noop(spark, corpus_df, tmp_path):
 def test_iceberg_roundtrip_when_jar_present(spark, corpus_df, tmp_path):
     """Iceberg writeTo round-trip — exercised only when a runtime jar
     + catalog are configured; the sandbox ships neither (verified by
-    a filesystem-wide jar search, docs/NEXT.md #6), so this records
+    a filesystem-wide jar search, docs/NEXT.md #1), so this records
     an explicit skip rather than silently passing."""
     import pytest
 
@@ -348,14 +348,14 @@ def test_tune_arrow_batch_sizing(spark, tmp_path):
 
     thin = spark.range(500).select(
         F.encode(F.lit("x" * 1024), "UTF-8").alias("html"))
-    rows = tune_arrow_batch(spark, thin, target_mb=8)
-    assert rows == 8192 or 4000 <= rows <= 8192  # 8MB/1KB clamped hi
+    rows = tune_arrow_batch(spark, thin)
+    assert rows == 8192 or 4000 <= rows <= 8192  # 4MB/1KB = 4096 rows
 
     fat = spark.range(8).select(
         F.encode(F.repeat(F.lit("y"), 4 * 1024 * 1024), "UTF-8")
         .alias("html"))
-    rows = tune_arrow_batch(spark, fat, target_mb=8)
-    assert rows == 64  # 8MB target / 4MB rows = 2 -> clamped to lo
+    rows = tune_arrow_batch(spark, fat)
+    assert rows == 64  # 4MB target / 4MB rows = 1 -> clamped to lo
 
     empty = spark.range(0).select(F.lit(b"").alias("html"))
     rows = tune_arrow_batch(spark, empty)

@@ -106,7 +106,7 @@ def _run_once(cpus: int, path: str) -> tuple[float, int]:
 
 def _run_once_pinned(cpus: int, path: str) -> tuple[float, int]:
     """One timed pass in a SUBPROCESS confined to cpus 0..cpus-1 via
-    taskset — the physically-isolated datapoint (NEXT.md #10): the
+    taskset — the physically-isolated datapoint: the
     JVM only ever sees the pinned cores, so the measured ratio cannot
     be polluted by scheduler spillover onto other cores (a live JVM's
     affinity cannot be changed after launch, hence the subprocess)."""
@@ -214,7 +214,7 @@ def main() -> None:
 Each level additionally ran in a subprocess confined with
 `taskset -c 0-{{N-1}}` — the JVM never sees cores outside its set, so
 the ratio is free of scheduler spillover (the missing-rigor third
-datapoint, docs/NEXT.md #10):
+datapoint):
 
 | parallelism (pinned) | wall secs | docs/sec |
 | --- | --- | --- |
